@@ -48,8 +48,25 @@ import org.apache.spark.sql.SparkSession
   * (`gc_sec`/`gc_count`) and per pass (`gc_sec_passes`), and the
   * maximum persistent-RDD count observed AFTER per-query cleanup
   * (`rdd_resident_max` — nonzero means something leaked past hygiene).
+  * A failed run still times as -1; the full line's `errors` map records
+  * each failing query's first error class and message (cut to 2,000
+  * chars), so a -1 says why.
   */
 object Bench {
+  /** A JSON string literal. Escapes backslash, quote and ALL control
+    * chars (<0x20): a tab or CR in oracle SQL or in an error
+    * message would otherwise make a reader's json.load fail.
+    */
+  private[graft] def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
   private def gcStats(): (Long, Long) = {
     import scala.jdk.CollectionConverters._
     val beans = java.lang.management.ManagementFactory
@@ -69,13 +86,18 @@ object Bench {
     var ranCount = 0
     var rddResidentMax = 0
     var dirtySinceGc = false
+    val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     def run(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
       val elapsed =
         try {
           fn(spark, sfDir).write.format("noop").mode("overwrite").save()
           (System.nanoTime() - t0) / 1e9
-        } catch { case _: Throwable => -1.0 }
+        } catch {
+          case e: Throwable =>
+            errors.getOrElseUpdate(name, s"${e.getClass.getName}: ${e.getMessage}".take(2000))
+            -1.0
+        }
       // cleanup OUTSIDE the timed window — hygiene cost must not be
       // charged to the query it follows. INCREMENTAL (round-11): the
       // full sweep + periodic GC runs only after queries that actually
@@ -174,7 +196,9 @@ object Bench {
     // unit/sf + run health) and stays well under the tail window; a
     // tail parser reads totals from stdout and the per-query map from
     // `bench_result.json` next to the repo root (path also printed).
-    val full = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","load_avg":$loadAvg,"passes":$nPasses,"pass_totals":$pt,"passes_detail":$detail,"spread":$spread,"gc_sec":${(gcT1 - gcT0) / 1e3},"gc_count":${gcC1 - gcC0},"gc_sec_passes":$gp,"hygiene":$hygiene,"rdd_resident_max":$rddResidentMax}"""
+    val errs = errors.map { case (k, v) => jsonString(k) + ":" + jsonString(v) }
+      .mkString("{", ",", "}")
+    val full = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","load_avg":$loadAvg,"passes":$nPasses,"pass_totals":$pt,"passes_detail":$detail,"spread":$spread,"gc_sec":${(gcT1 - gcT0) / 1e3},"gc_count":${gcC1 - gcC0},"gc_sec_passes":$gp,"hygiene":$hygiene,"rdd_resident_max":$rddResidentMax,"errors":$errs}"""
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_result.json")
     try {
       val w = new java.io.PrintWriter(new java.io.File(outPath), "UTF-8")

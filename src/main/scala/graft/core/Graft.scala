@@ -1,6 +1,8 @@
 package graft.core
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Session factory for the graft engine.
   *
@@ -131,9 +133,16 @@ object Graft {
   * be partitioned directories — the API takes a dir so the same code
   * serves both. Lazy vals so a query referencing the same table twice
   * shares one plan node (required for unambiguous self-references).
+  *
+  * Schema discovery is resolved once per file, not once per query: a
+  * plain `spark.read.parquet` infers the schema with a one-task Spark job
+  * before the query's own work starts, and every query builds a new
+  * `Tables`. A single-file table's inferred schema is kept in a
+  * process-wide cache (see [[Tables.read]]) and later reads pass it as
+  * the user schema, which starts no job.
   */
 final class Tables(spark: SparkSession, dir: String) {
-  private def t(name: String): DataFrame = spark.read.parquet(s"$dir/$name.parquet")
+  private def t(name: String): DataFrame = Tables.read(spark, s"$dir/$name.parquet")
   lazy val region: DataFrame    = t("region")
   lazy val nation: DataFrame    = t("nation")
   lazy val customer: DataFrame  = t("customer")
@@ -165,4 +174,57 @@ final class Tables(spark: SparkSession, dir: String) {
 
 object Tables {
   def apply(spark: SparkSession, dir: String): Tables = new Tables(spark, dir)
+
+  /** Session confs that change the schema parquet inference yields. */
+  private val inferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled")
+
+  /** A file's identity plus the inference confs in force when it was read:
+    * a rewritten file (new length or mtime) or a changed conf is a miss.
+    */
+  private final case class SchemaKey(path: String, length: Long, mtime: Long,
+                                     confs: Seq[Option[String]])
+
+  /** Entries kept; least recently used beyond it are dropped. The harness
+    * reads ten tables, at most two conf variants each, per data dir.
+    */
+  private val maxSchemas = 256
+
+  private val schemas =
+    new java.util.LinkedHashMap[SchemaKey, StructType](16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[SchemaKey, StructType]): Boolean = size() > maxSchemas
+    }
+
+  /** Read one parquet table. For a single file the schema is looked up by
+    * [[SchemaKey]] and only inferred on a miss; the read itself always
+    * goes through `spark.read.schema(s).parquet(path)`. A directory (or a
+    * path that cannot be stat'ed) keeps plain inference: its top-level
+    * mtime does not change when a nested part file is rewritten, so it
+    * cannot key the cache.
+    */
+  private[graft] def read(spark: SparkSession, path: String): DataFrame = {
+    val status =
+      try {
+        val p = new Path(path)
+        Some(p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p))
+      } catch { case _: java.io.IOException => None }
+    status.filter(_.isFile) match {
+      case None => spark.read.parquet(path)
+      case Some(st) =>
+        val key = SchemaKey(st.getPath.toString, st.getLen, st.getModificationTime,
+          inferenceConfs.map(spark.conf.getOption))
+        val cached = schemas.synchronized(Option(schemas.get(key)))
+        val schema = cached.getOrElse {
+          // inferred outside the lock: a racing duplicate inference is harmless
+          val inferred = spark.read.parquet(path).schema
+          schemas.synchronized(schemas.put(key, inferred))
+          inferred
+        }
+        spark.read.schema(schema).parquet(path)
+    }
+  }
 }

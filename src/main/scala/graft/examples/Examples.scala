@@ -3,6 +3,7 @@ package graft.examples
 import java.nio.charset.StandardCharsets.UTF_8
 
 import graft.streaming._
+import org.apache.spark.sql.Dataset
 
 /** The reference's examples re-expressed as graft topologies — the
   * migration showcase (each cites its kasper original).
@@ -13,17 +14,23 @@ object Examples {
     * value into words, keep a running count per word in keyed state (the
     * reference's `word-count/count/{word}` store entries), emit the
     * updated ASCII count per word exactly like the original.
+    *
+    * Runs on the default `batchWait` of "5 seconds": a batch fires every
+    * 5 s, never because 1,000 messages are waiting (kasper's BatchSize
+    * trigger has no counterpart here; see [[TopicProcessorConfig]]).
     */
   def wordCountTopology(name: String): TopicProcessor = new TopicProcessor(
-    TopicProcessorConfig(name = name, inputTopics = Seq("words")),
-    in => {
-      import in.sparkSession.implicits._
-      val words = in.flatMap(m =>
-        new String(m.value, UTF_8).split(" ").filter(_.nonEmpty))
-      StatefulOps.runningCount(words).map(kc =>
-        OutMessage("word-counts", kc.key.getBytes(UTF_8),
-          kc.count.toString.getBytes(UTF_8)))
-    })
+    TopicProcessorConfig(name = name, inputTopics = Seq("words")), wordCount)
+
+  /** [[wordCountTopology]]'s transform. */
+  def wordCount(in: Dataset[Message]): Dataset[OutMessage] = {
+    import in.sparkSession.implicits._
+    val words = in.flatMap(m =>
+      new String(m.value, UTF_8).split(" ").filter(_.nonEmpty))
+    StatefulOps.runningCount(words).map(kc =>
+      OutMessage("word-counts", kc.key.getBytes(UTF_8),
+        kc.count.toString.getBytes(UTF_8)))
+  }
 
   /** Hello-world producer transform (`examples/producer_example.go:33-38`):
     * value → "Hello " + value, key preserved.

@@ -60,9 +60,15 @@ final class GraftMetricsListener(provider: MetricsProvider = NoopMetricsProvider
     batchSummary.observe(p.batchDuration.toDouble,
       Option(p.name).getOrElse(p.id.toString))
     Option(p.sink).foreach { s =>
-      if (s.numOutputRows >= 0) {
-        outgoing.add(s.numOutputRows)
-        outgoingCounter.add(s.numOutputRows.toDouble, s.description)
+      // a foreachBatch sink reports -1; TopicProcessor observes its rows
+      val rows =
+        if (s.numOutputRows >= 0) Some(s.numOutputRows)
+        else Option(p.observedMetrics)
+          .flatMap(m => Option(m.get(GraftMetricsListener.OutgoingRowsMetric)))
+          .map(_.getLong(0))
+      rows.foreach { n =>
+        outgoing.add(n)
+        outgoingCounter.add(n.toDouble, s.description)
       }
     }
     p.sources.foreach { s =>
@@ -90,6 +96,11 @@ final class GraftMetricsListener(provider: MetricsProvider = NoopMetricsProvider
 
 object GraftMetricsListener {
   private val mapper = new ObjectMapper()
+
+  /** Observed-metric name of a streaming query's output row count, read
+    * as the outgoing count when the sink reports none.
+    */
+  val OutgoingRowsMetric = "graft_outgoing_rows"
 
   /** Offset string → map of topic-partition (or field name) → offset.
     * Plain numerals yield a single `""` entry; Kafka JSON maps yield

@@ -124,6 +124,55 @@ class TopicProcessorSpec extends SparkSpec {
     assert(tp.listener.totalIncoming < 50, "sibling query's 50 rows must not be absorbed")
   }
 
+  test("outgoing count through runWith equals the rows a foreachBatch sink received") {
+    // kasper's outgoing_message_count: the foreachBatch sink reports -1
+    // output rows, so the count comes from the observation on the
+    // transform's output — and must not cost a job per batch
+    val lines = Seq(Seq("a b a", "c"), Seq("b d", "e e a"), Seq("f"))
+    def feed(in: MemoryStream[Message],
+             q: org.apache.spark.sql.streaming.StreamingQuery): Double = {
+      var off = 0L
+      lines.foreach { batch =>
+        in.addData(batch.map { v => off += 1; msg("words", "k", v, off) }: _*)
+        q.processAllAvailable()
+      }
+      q.stop(); q.awaitTermination()
+      // no-data batches run no jobs; divide by the batches that ran
+      jobsInGroup(q.runId.toString).size.toDouble / (q.lastProgress.batchId + 1)
+    }
+    val received = new java.util.concurrent.atomic.AtomicLong
+    val sink: (org.apache.spark.sql.DataFrame, Long) => Unit =
+      (batch, _) => received.addAndGet(batch.collect().length.toLong)
+
+    val tp = new TopicProcessor(
+      TopicProcessorConfig(name = s"wc-out-${System.nanoTime()}",
+        inputTopics = Seq("words"), batchWait = "0 seconds"),
+      graft.examples.Examples.wordCount)
+    val in = MemoryStream[Message]
+    val observedJobs = feed(in, tp.runWith(in.toDS())(sink))
+    spark.streams.removeListener(tp.listener)
+    // updated words per batch: {a,b,c} + {b,d,e,a} + {f}
+    assert(received.get == 8)
+    org.scalatest.concurrent.Eventually.eventually(
+      org.scalatest.concurrent.Eventually.timeout(org.scalatest.time.Span(10,
+        org.scalatest.time.Seconds))) {
+      assert(tp.listener.totalOutgoing == received.get)
+    }
+
+    // the same topology wired as runWith was before the observation
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-wc-plain")
+    val in2 = MemoryStream[Message]
+    val plain = graft.examples.Examples.wordCount(in2.toDS()).toDF().writeStream
+      .option("checkpointLocation", ckpt.toString)
+      .outputMode(org.apache.spark.sql.streaming.OutputMode.Update())
+      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime("0 seconds"))
+      .foreachBatch(sink).start()
+    val plainJobs = try feed(in2, plain) finally graft.core.Graft.removeRecursively(ckpt)
+    assert(plainJobs > 0)
+    assert(observedJobs <= plainJobs,
+      s"jobs per batch rose with the observation: $observedJobs vs $plainJobs")
+  }
+
   test("checkpoint directory records committed epochs (offset-commit analog)") {
     val name = s"ckpt-${System.nanoTime()}"
     val tp = new TopicProcessor(
