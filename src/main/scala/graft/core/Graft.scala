@@ -75,6 +75,10 @@ object Graft {
       // chain's per-stage task fans dropped ~5x, output rows identical)
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
       .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
+      // Spark has no nanosecond timestamp type: read a TIMESTAMP(NANOS)
+      // parquet column as its raw long (Tables.events converts it). Set
+      // here, once, so every read in a session sees the same conf
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.parquet.filterPushdown", "true")
       .config("spark.sql.parquet.aggregatePushdown", "true")
       .config("spark.sql.files.maxPartitionBytes", (128L * 1024 * 1024).toString)
@@ -158,9 +162,11 @@ final class Tables(spark: SparkSession, dir: String) {
     * no nanos type, so read as long and truncate to micros — what DuckDB's
     * reader does, keeping the oracle comparable) and native micros
     * timestamps. Adapt on the discovered schema so both read identically.
+    * Reading nanos as long needs `spark.sql.legacy.parquet.nanosAsLong`,
+    * which [[Graft.configure]] sets; a session built without it fails
+    * the nanos read at analysis.
     */
   lazy val events: DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = t("events")
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>

@@ -1295,7 +1295,12 @@ object VectorOps {
       // fold seeds with the array head and replaces only on a strict
       // win under Spark's ASCENDING double sort order (NaN greatest =
       // always loses; ties keep the earlier lower cid), bit-matching
-      // the old orderBy(__d, cid) rank in every case.
+      // the old orderBy(__d, cid) rank for non-null distances. A null
+      // distance differs: the old ascending window sorted nulls first,
+      // so a null won rank 1, while the fold's win test is null for it
+      // and keeps the accumulator (a null head stays, which is also the
+      // old winner; a null later entry never wins). Distances are null
+      // only for a null subvector or codeword.
       def assign(of: DataFrame, cents: DataFrame): DataFrame = {
         val barr = cents
           .select(col("j"), struct(col("cid"), col("cv"),
@@ -1573,8 +1578,13 @@ object VectorOps {
       * fold seeds with the array head and replaces only on a strict win
       * under Spark's ASCENDING double sort order (NaN greatest = always
       * loses; ties keep the earlier lower pcid over the sorted array),
-      * bit-matching the old `orderBy(__d, pcid)` rank in every case;
-      * the per-entry distance is the same pn2 − 2·dot(sv, pv) doubles.
+      * bit-matching the old `orderBy(__d, pcid)` rank for non-null
+      * distances; the per-entry distance is the same pn2 − 2·dot(sv, pv)
+      * doubles. A null distance differs: the old ascending window sorted
+      * nulls first, so a null won rank 1, while the fold's win test is
+      * null for it and keeps the accumulator (a null head stays, which is
+      * also the old winner; a null later entry never wins). Distances are
+      * null only for a null slice or codeword.
       * The fold itself is an interpreted HOF, but the hot per-entry
       * work is the native [[VectorDot]] kernel (the r4 ADC discipline).
       */

@@ -280,9 +280,10 @@ object GraphOps {
     // two narrow stages IN PARALLEL inside the pp-fill job — the union
     // form shuffles the same total rows through one WIDER serial
     // exchange plus an extra materialization job, and measured 1.2–1.4×
-    // slower across the whole q248 chain family at sf0.1 (probe:
-    // tools/PpProbe; pp fill 0.58→0.76 s + 0.49 s marg job, round-1
-    // 0.94→1.18 s warm). Kept as the r15 shape.
+    // slower across the whole q248 chain family at sf0.1 (pp fill
+    // 0.58→0.76 s + 0.49 s marg job, round-1 0.94→1.18 s warm; the A/B
+    // and its numbers are in OPTIMIZATION_r16.md §2). Kept as the r15
+    // shape.
     val nc = pairs.groupBy("c").agg(sum(col("n")).as("nc"))
     val nx = pairs.groupBy("x").agg(sum(col("n")).as("nx"))
     val pp = ScaleOps.trackCache(pairs.join(nc, "c").join(nx, "x")

@@ -1,129 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
 import graft.dedup.Dedup
-
-/** One (band, bucket-hash) occupancy row of a document's MinHash LSH
-  * banding — the unit the streaming candidate gate keys its state on.
-  */
-case class BandedDoc(band: Int, bh: Long, id: Long)
-
-/** A near-dup candidate pair (idA < idB) emitted by the gate when the
-  * second member's band bucket collides with an accumulated member's.
-  */
-case class CandPair(idA: Long, idB: Long)
-
-/** Streaming near-dup machinery shared by the maintainer generations:
-  * the `transformWithState` LSH candidate gate and the verify→CC label
-  * fold both lifecycles run per batch.
-  */
-object DedupStream {
-
-  /** Bucket-keyed LSH candidate discovery on `transformWithState`: state
-    * is one `ListState[Long]` of accumulated member ids per (band, bh)
-    * bucket on the configured state store (RocksDB in production — the
-    * kasper store surface, `redis.go:29-155`, as keyed streaming state).
-    * A batch's rows emit a candidate pair for every (new, accumulated)
-    * and (new, new) co-bucket combination — exactly when the pair's
-    * SECOND member arrives, so no pair is ever re-derived — under the
-    * batch path's occupancy guard: a bucket whose ACCUMULATED size
-    * leaves [2, maxBucket] emits nothing this batch (pairs it yielded
-    * while smaller are kept — incremental recall ≥ the batch run's,
-    * same contract as [[DedupGroupMaintainer]]). Pairs can repeat
-    * across bands; callers dedupe the delta.
-    */
-  def lshCandidateGate(banded: Dataset[BandedDoc],
-                       maxBucket: Long = 10000): Dataset[CandPair] = {
-    import banded.sparkSession.implicits._
-    banded.groupByKey(r => (r.band, r.bh))
-      .transformWithState(new LshBucketProcessor(maxBucket),
-        org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Append())
-  }
-
-  private final class LshBucketProcessor(maxBucket: Long)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        (Int, Long), BandedDoc, CandPair] {
-    @transient private var members:
-      org.apache.spark.sql.streaming.ListState[Long] = _
-
-    override def init(outputMode: OutputMode,
-                      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      members = getHandle.getListState[Long]("members",
-        org.apache.spark.sql.Encoders.scalaLong,
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-
-    override def handleInputRows(key: (Int, Long), rows: Iterator[BandedDoc],
-        timerValues: org.apache.spark.sql.streaming.TimerValues):
-        Iterator[CandPair] = {
-      val newIds = rows.map(_.id).toArray.distinct
-      val oldIds = {
-        val it = members.get()
-        val b = Array.newBuilder[Long]
-        while (it.hasNext) b += it.next()
-        b.result()
-      }
-      // occupancy accumulates regardless of the guard (the guard is on
-      // EMISSION, matching the batch path's okBuckets-on-accumulated rule)
-      members.appendList(newIds)
-      val total = oldIds.length + newIds.length
-      if (total < 2 || total > maxBucket) Iterator.empty
-      else {
-        val out = scala.collection.mutable.LinkedHashSet.empty[CandPair]
-        var i = 0
-        while (i < newIds.length) {
-          val a = newIds(i)
-          var j = 0
-          while (j < oldIds.length) {
-            val b = oldIds(j)
-            if (a != b) out += CandPair(math.min(a, b), math.max(a, b))
-            j += 1
-          }
-          j = i + 1
-          while (j < newIds.length) {
-            val b = newIds(j)
-            out += CandPair(math.min(a, b), math.max(a, b))
-            j += 1
-          }
-          i += 1
-        }
-        out.iterator
-      }
-    }
-  }
-
-  /** The label fold both maintainer generations run per batch: exact
-    * jaccard verification of the candidate delta against the
-    * accumulated gram sets, then connected components seeded with the
-    * PRIOR label table — (id → group) rows are a path-compressed
-    * summary of every pair ever verified, so each round's CC input is
-    * |delta pairs| + |labels| edges, never the full history, and a new
-    * pair bridging two old groups relabels both sides correctly.
-    * Returns the checkpoint-truncated new label table; the caller
-    * releases the superseded one.
-    */
-  private[streaming] def foldLabels(cands: DataFrame, allSets: DataFrame,
-                                    accLabels: Option[DataFrame],
-                                    threshold: Double): DataFrame = {
-    val pairs = Dedup.verifyJaccard(cands, allSets, threshold)
-      .select("id_a", "id_b")
-    // prior labels as edges = path compression of the full pair history
-    val labelEdges = accLabels.map(_.toDF("id_a", "id_b")).getOrElse {
-      pairs.sparkSession.emptyDataFrame
-        .select(lit(0L).as("id_a"), lit(0L).as("id_b")).limit(0)
-    }
-    // connectedComponents materializes its rounds eagerly, so pairs (and
-    // with them any batch-only frames) are fully consumed inside this call
-    val comp = Dedup.connectedComponents(
-      pairs.unionAll(labelEdges), "id_a", "id_b")
-    val newLabels = allSets.select("id").join(comp, Seq("id"), "left")
-      .select(col("id"), coalesce(col("grp"), col("id")).as("grp"))
-      .localCheckpoint(true)
-    Dedup.releaseCheckpoint(comp)
-    newLabels
-  }
-}
 
 /** Incremental near-dup GROUP maintenance over a document stream — the
   * streaming lifecycle of [[graft.dedup.Dedup.nearDupGroups]], matching
@@ -138,15 +17,16 @@ object DedupStream {
   *  2. only that candidate delta is exact-verified (true jaccard over
   *     the accumulated gram sets — same kernel as the batch path);
   *  3. labels fold in by connected components seeded with the PRIOR
-  *     label table ([[DedupStream.foldLabels]]).
+  *     label table: (id → group) rows are a path-compressed summary of
+  *     every pair ever verified, so each round's CC input is
+  *     |delta pairs| + |labels| edges, never the full history, and a new
+  *     pair bridging two old groups relabels both sides.
   *
   * State held as cached/checkpointed frames (buckets, gram sets, labels)
   * — the driver-side embodiment of what a cluster deployment would keep
   * in tables; the label table is truncated (localCheckpoint) and its
   * superseded version released every batch, so lineage and block-manager
   * usage stay O(current state) across an unbounded stream.
-  * [[DedupGroupMaintainerTws]] is the forward generation: step 1's
-  * bucket state lives on the streaming state store instead.
   *
   * Ids must be fresh across the stream (the append contract); re-sending
   * a doc id double-counts its buckets. The per-batch bucket-size guard
@@ -198,7 +78,21 @@ final class DedupGroupMaintainer(textCol: String, idCol: String,
       .select(least(col("a.id"), col("b.id")).as("id_a"),
         greatest(col("a.id"), col("b.id")).as("id_b"))
       .distinct()
-    val newLabels = DedupStream.foldLabels(cands, allSets, accLabels, threshold)
+    val pairs = Dedup.verifyJaccard(cands, allSets, threshold)
+      .select("id_a", "id_b")
+    // prior labels as edges = path compression of the full pair history
+    val labelEdges = accLabels.map(_.toDF("id_a", "id_b")).getOrElse {
+      batch.sparkSession.emptyDataFrame
+        .select(lit(0L).as("id_a"), lit(0L).as("id_b")).limit(0)
+    }
+    // connectedComponents materializes its rounds eagerly, so pairs (and
+    // with them the batch-only frames) are fully consumed before release
+    val comp = Dedup.connectedComponents(
+      pairs.unionAll(labelEdges), "id_a", "id_b")
+    val newLabels = allSets.select("id").join(comp, Seq("id"), "left")
+      .select(col("id"), coalesce(col("grp"), col("id")).as("grp"))
+      .localCheckpoint(true)
+    Dedup.releaseCheckpoint(comp)
     accLabels.foreach(Dedup.releaseCheckpoint)
     accBanded.foreach(Dedup.releaseCheckpoint)
     accSets.foreach(Dedup.releaseCheckpoint)
@@ -224,158 +118,5 @@ final class DedupGroupMaintainer(textCol: String, idCol: String,
     accSets.foreach(_.unpersist(blocking = false))
     accLabels.foreach(Dedup.releaseCheckpoint)
     accBanded = None; accSets = None; accLabels = None
-  }
-}
-
-/** [[DedupGroupMaintainer]] with the bucket-accumulation state ported to
-  * `transformWithState` — the forward-generation state API the
-  * funnel/budget/scd2/fictions gates already ride: candidate discovery
-  * (step 1, the genuinely KEYED streaming state) runs inside a
-  * persistent streaming query through [[DedupStream.lshCandidateGate]],
-  * so the per-bucket member lists live on the configured state store
-  * (RocksDB) with `ListState` append-only writes — O(batch) state I/O
-  * per bucket touched, never a rescan of the accumulated banding (the
-  * legacy maintainer re-joins the full accumulated bucket table every
-  * batch). Steps 2–3 (jaccard verification over the gram sets, the CC
-  * label fold) are RELATIONAL state, not keyed state — they stay
-  * driver-held frames exactly like the legacy class (a cluster
-  * deployment keeps them in tables), via the shared
-  * [[DedupStream.foldLabels]].
-  *
-  * Emission equality with the legacy maintainer AND convergence to the
-  * batch [[graft.dedup.Dedup.nearDupGroups]] — including the
-  * group-bridging batch case — is spec-proven on RocksDB
-  * (StreamingSpec). Same fresh-id append contract as the legacy class.
-  *
-  * Gate input seam: with `driverFeed = true` (default) the banded rows
-  * of each ingested batch are collected driver-side to feed the gate's
-  * MemoryStream — batch-sized, the same materialization the enclosing
-  * foreachBatch already did. `driverFeed = false` is the fully
-  * DE-DRIVERED path: the banded FRAME writes (distributed) to a
-  * file-source ingest directory the gate streams from, so banded rows
-  * never transit the driver at any batch size — the harness shape of a
-  * cluster deployment feeding the gate from the source stream.
-  * Emission equality between the two feeds is spec-proven
-  * (StreamingSpec).
-  */
-final class DedupGroupMaintainerTws(textCol: String, idCol: String,
-                                    n: Int = 3, numHashes: Int = 64,
-                                    bandings: Seq[Int] = Seq(16),
-                                    threshold: Double = 0.5,
-                                    maxBucket: Long = 10000,
-                                    driverFeed: Boolean = true)
-                                   (implicit spark: SparkSession) {
-  require(bandings.nonEmpty && bandings.forall(b => b > 0 && numHashes % b == 0),
-    s"every banding must divide numHashes=$numHashes, got $bandings")
-  import spark.implicits._
-  implicit private val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-
-  private val input: Option[
-    org.apache.spark.sql.execution.streaming.runtime.MemoryStream[BandedDoc]] =
-    if (driverFeed)
-      Some(org.apache.spark.sql.execution.streaming.runtime.MemoryStream[BandedDoc])
-    else None
-  private val ingestDir: Option[java.nio.file.Path] =
-    if (driverFeed) None
-    else Some(java.nio.file.Files.createTempDirectory("graft_dedup_feed"))
-  private val gateSource: Dataset[BandedDoc] = input.map(_.toDS()).getOrElse(
-    spark.readStream
-      .schema(org.apache.spark.sql.Encoders.product[BandedDoc].schema)
-      .parquet(ingestDir.get.toString)
-      .as[BandedDoc])
-  // candidate pairs stay DataFrames end-to-end: each gate micro-batch is
-  // checkpoint-truncated (an eager materialization sized to the batch's
-  // OUTPUT, never a row-by-row driver collect) and queued as a frame
-  // handle for the next ingest's label fold — at a real ingest rate the
-  // pair volume never transits the driver (r13 VERDICT item 2). The
-  // queue must be lock-free: ingest() holds the maintainer monitor while
-  // processAllAvailable() waits on this foreachBatch, so the body must
-  // not synchronize on the maintainer.
-  private val pendingCands =
-    new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
-  // remembered so close() can delete it — repeated maintainer
-  // construction in a long-lived session must not accumulate RocksDB
-  // checkpoint state on disk
-  private val checkpointDir =
-    java.nio.file.Files.createTempDirectory("graft_dedup_gate")
-  private val query = DedupStream.lshCandidateGate(gateSource, maxBucket)
-    .writeStream
-    .option("checkpointLocation", checkpointDir.toString)
-    .outputMode(OutputMode.Append())
-    .foreachBatch { (b: Dataset[CandPair], _: Long) =>
-      pendingCands.add(b.toDF().localCheckpoint(true)); ()
-    }
-    .start()
-
-  private var accSets: Option[DataFrame] = None   // (id, set)
-  private var accLabels: Option[DataFrame] = None // (id, grp)
-
-  /** Fold one micro-batch of (idCol, textCol) rows into the state. */
-  def ingest(batch: DataFrame): Unit = synchronized {
-    if (batch.isEmpty) return
-    val sets = Dedup.shingleSets(batch, textCol, idCol, n).cache()
-    val allSets = accSets.map(_.unionAll(sets)).getOrElse(sets)
-      .localCheckpoint(true)
-    val bandedDf = Dedup.multiBandBuckets(
-        Dedup.minHashSignatures(batch, textCol, idCol, n, numHashes),
-        numHashes, bandings)
-      .select(col("band").cast("int").as("band"),
-        col("bh").cast("long").as("bh"), col("id").cast("long").as("id"))
-    input match {
-      case Some(mem) => // driver feed: batch-sized collect into MemoryStream
-        val banded = bandedDf.as[(Int, Long, Long)].collect()
-          .map { case (band, bh, id) => BandedDoc(band, bh, id) }
-        if (banded.nonEmpty) {
-          mem.addData(banded.toIndexedSeq)
-          query.processAllAvailable()
-        }
-      case None => // de-drivered feed: distributed write to the file source
-        bandedDf.write.mode("append").parquet(ingestDir.get.toString)
-        query.processAllAvailable()
-    }
-    val delta = {
-      val b = Seq.newBuilder[DataFrame]
-      var p = pendingCands.poll()
-      while (p != null) { b += p; p = pendingCands.poll() }
-      b.result()
-    }
-    val cands = delta
-      .reduceOption(_ unionAll _)
-      .map(_.select(col("idA").as("id_a"), col("idB").as("id_b"))
-        .distinct()) // the gate can emit a pair once per band
-      .getOrElse(spark.emptyDataFrame
-        .select(lit(0L).as("id_a"), lit(0L).as("id_b")).limit(0))
-    val newLabels = DedupStream.foldLabels(cands, allSets, accLabels, threshold)
-    // foldLabels materializes its CC rounds eagerly, so the candidate
-    // delta is fully consumed — the gate-batch checkpoints can release
-    delta.foreach(Dedup.releaseCheckpoint)
-    accLabels.foreach(Dedup.releaseCheckpoint)
-    accSets.foreach(Dedup.releaseCheckpoint)
-    sets.unpersist(blocking = false)
-    accSets = Some(allSets)
-    accLabels = Some(newLabels)
-  }
-
-  /** Current labels: (idCol, group, keep) — same shape and survivor rule
-    * as [[graft.dedup.Dedup.nearDupGroups]]. Empty before any ingest.
-    */
-  def labels(spark: SparkSession): DataFrame =
-    accLabels.map(_.select(col("id").as(idCol), col("grp").as("group"))
-        .withColumn("keep", col("group") === col(idCol)))
-      .getOrElse(spark.emptyDataFrame
-        .select(lit(0L).as(idCol), lit(0L).as("group"), lit(true).as("keep")).limit(0))
-
-  /** Stop the gate query and release all relational + checkpoint state. */
-  def close(): Unit = synchronized {
-    query.stop()
-    var p = pendingCands.poll()
-    while (p != null) { Dedup.releaseCheckpoint(p); p = pendingCands.poll() }
-    accSets.foreach(Dedup.releaseCheckpoint)
-    accLabels.foreach(Dedup.releaseCheckpoint)
-    accSets = None; accLabels = None
-    // the gate's temp checkpoint/ingest dirs would otherwise outlive
-    // the session
-    graft.core.Graft.removeRecursively(checkpointDir)
-    ingestDir.foreach(graft.core.Graft.removeRecursively)
   }
 }

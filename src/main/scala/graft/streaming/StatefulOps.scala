@@ -27,6 +27,13 @@ case class JoinState(characters: Map[String, Character],
   * re-expressed on `flatMapGroupsWithState`, where Spark owns
   * checkpointing, recovery and state placement (vs kasper's external
   * Redis/ES stores, `redis.go`/`elasticsearch.go`).
+  *
+  * Each operator has one implementation. The `flatMapGroupsWithState`
+  * operators run on either state store (the default HDFS-backed one or
+  * RocksDB). [[cdcGateTws]], [[linearAttributionGateTws]] and
+  * [[chunkDedupGate]] exist only on `transformWithState`, which runs
+  * only on RocksDB: call [[graft.core.Graft.useRocksDbStateStore]]
+  * before starting a query that uses one of them.
   */
 object StatefulOps {
 
@@ -68,91 +75,6 @@ object StatefulOps {
             Iterator(KeyCount(key, c))
           }
       }
-  }
-
-  /** KQ-6 on the modern `transformWithState` API (Spark 4): typed state
-    * variables with native TTL, timers, and RocksDB-only execution — the
-    * current-generation analog of kasper's pluggable store surface and
-    * the recommended keyed-state path at scale (incremental checkpoints,
-    * spillable state, per-variable TTL instead of whole-blob timeouts).
-    * Requires the RocksDB state store provider
-    * ([[graft.core.Graft.useRocksDbStateStore]]).
-    */
-  def runningCountTws(keys: Dataset[String], ttl: Option[java.time.Duration] = None)
-      : Dataset[KeyCount] = {
-    import keys.sparkSession.implicits._
-    // state TTL is only valid under ProcessingTime time mode
-    // (StatefulProcessorHandle.validateTTLConfig) — pick the mode the
-    // requested config requires instead of crashing at query start
-    val timeMode =
-      if (ttl.isDefined) org.apache.spark.sql.streaming.TimeMode.ProcessingTime()
-      else org.apache.spark.sql.streaming.TimeMode.None()
-    keys.groupByKey(identity)
-      .transformWithState(new RunningCountProcessor(ttl), timeMode, OutputMode.Update())
-  }
-
-  private final class RunningCountProcessor(ttl: Option[java.time.Duration])
-      extends org.apache.spark.sql.streaming.StatefulProcessor[String, String, KeyCount] {
-    @transient private var count: org.apache.spark.sql.streaming.ValueState[Long] = _
-
-    override def init(outputMode: OutputMode,
-                      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      count = getHandle.getValueState[Long]("count",
-        org.apache.spark.sql.Encoders.scalaLong,
-        ttl.map(org.apache.spark.sql.streaming.TTLConfig.apply)
-          .getOrElse(org.apache.spark.sql.streaming.TTLConfig.NONE))
-
-    override def handleInputRows(key: String, rows: Iterator[String],
-        timerValues: org.apache.spark.sql.streaming.TimerValues): Iterator[KeyCount] = {
-      val c = (if (count.exists()) count.get() else 0L) + rows.size
-      count.update(c)
-      Iterator(KeyCount(key, c))
-    }
-  }
-
-  /** [[funnelGate]] on the modern `transformWithState` API — the same
-    * per-user (stage, anchor ts) progression, held in a typed
-    * `ValueState` on the RocksDB store (incremental checkpoints,
-    * spillable state) instead of a `flatMapGroupsWithState` blob. Same
-    * semantics contract as [[funnelGate]] (in-order per-key delivery,
-    * (ts, type) sort within a batch); the spec asserts the two gates
-    * emit identical progressions. Requires the RocksDB provider like
-    * [[runningCountTws]].
-    */
-  def funnelGateTws(events: Dataset[FunnelEvent], steps: Seq[String],
-                    within: Long): Dataset[FunnelProgress] = {
-    require(steps.nonEmpty, "funnel needs at least one step")
-    import events.sparkSession.implicits._
-    events.groupByKey(_.uid)
-      .transformWithState(new FunnelProcessor(steps, within),
-        org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Update())
-  }
-
-  private final class FunnelProcessor(steps: Seq[String], within: Long)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[Long, FunnelEvent, FunnelProgress] {
-    @transient private var prog: org.apache.spark.sql.streaming.ValueState[(Int, Long)] = _
-
-    override def init(outputMode: OutputMode,
-                      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      prog = getHandle.getValueState[(Int, Long)]("prog",
-        org.apache.spark.sql.Encoders.tuple(
-          org.apache.spark.sql.Encoders.scalaInt,
-          org.apache.spark.sql.Encoders.scalaLong),
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-
-    override def handleInputRows(uid: Long, rows: Iterator[FunnelEvent],
-        timerValues: org.apache.spark.sql.streaming.TimerValues): Iterator[FunnelProgress] = {
-      var (stage, anchor) = if (prog.exists()) prog.get() else (0, 0L)
-      val before = stage
-      for (e <- rows.toVector.sortBy(e => (e.ts, e.etype)) if stage < steps.length) {
-        val qualifies = e.etype == steps(stage) &&
-          (stage == 0 || (e.ts >= anchor && e.ts <= anchor + within))
-        if (qualifies) { stage += 1; anchor = e.ts }
-      }
-      prog.update((stage, anchor))
-      if (stage > before) Iterator(FunnelProgress(uid, stage, anchor))
-      else Iterator.empty
-    }
   }
 
   /** A marketing event on the streaming attribution rail: event-time in
@@ -400,47 +322,6 @@ object StatefulOps {
       }
   }
 
-  /** [[budgetGate]] on the modern `transformWithState` API — the same
-    * greedy-with-skip admission, with the per-domain running sum in a
-    * typed `ValueState[Long]` on the RocksDB store instead of a
-    * `flatMapGroupsWithState` blob. The PREFERRED form going forward
-    * (flatMapGroupsWithState is the deprecation-bound API); the legacy
-    * gate stays as the reference implementation and the spec asserts
-    * the two admit identically. Requires the RocksDB provider
-    * ([[graft.core.Graft.useRocksDbStateStore]]).
-    */
-  def budgetGateTws(docs: Dataset[BudgetDoc], budget: Long): Dataset[Admitted] = {
-    import docs.sparkSession.implicits._
-    docs.groupByKey(_.domain)
-      .transformWithState(new BudgetProcessor(budget),
-        org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Update())
-  }
-
-  private final class BudgetProcessor(budget: Long)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[String, BudgetDoc, Admitted] {
-    @transient private var cum: org.apache.spark.sql.streaming.ValueState[Long] = _
-
-    override def init(outputMode: OutputMode,
-                      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      cum = getHandle.getValueState[Long]("cum",
-        org.apache.spark.sql.Encoders.scalaLong,
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-
-    override def handleInputRows(domain: String, rows: Iterator[BudgetDoc],
-        timerValues: org.apache.spark.sql.streaming.TimerValues): Iterator[Admitted] = {
-      var c = if (cum.exists()) cum.get() else 0L
-      // materialize before updating state — the iterator is lazy
-      val admitted = rows.flatMap { d =>
-        if (d.tokens >= 0 && c + d.tokens <= budget) {
-          c += d.tokens
-          Some(Admitted(domain, d.id, d.tokens, c))
-        } else None
-      }.toVector
-      cum.update(c)
-      admitted.iterator
-    }
-  }
-
   case class Scd2Event(key: Long, ts: Long, attr: String)
   case class Scd2Row(key: Long, attr: String, validFrom: Long,
                      validTo: Option[Long])
@@ -473,48 +354,6 @@ object StatefulOps {
           closed.result().iterator ++
             Iterator(Scd2Row(key, cur._1, cur._2, None))
       }
-  }
-
-  /** [[scd2Gate]] on the modern `transformWithState` API — the open
-    * (attr, since) interval in a typed `ValueState`; same
-    * close-and-reopen emission, spec-asserted emission-equal to the
-    * legacy gate. Completes the TWS ports of the keyed-gate family
-    * (budget/transition/funnel/scd2).
-    */
-  def scd2GateTws(events: Dataset[Scd2Event]): Dataset[Scd2Row] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.key)
-      .transformWithState(new Scd2Processor,
-        org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Update())
-  }
-
-  private final class Scd2Processor
-      extends org.apache.spark.sql.streaming.StatefulProcessor[Long, Scd2Event, Scd2Row] {
-    @transient private var open: org.apache.spark.sql.streaming.ValueState[(String, Long)] = _
-
-    override def init(outputMode: OutputMode,
-                      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      open = getHandle.getValueState[(String, Long)]("open",
-        org.apache.spark.sql.Encoders.tuple(
-          org.apache.spark.sql.Encoders.STRING,
-          org.apache.spark.sql.Encoders.scalaLong),
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-
-    override def handleInputRows(key: Long, rows: Iterator[Scd2Event],
-        timerValues: org.apache.spark.sql.streaming.TimerValues): Iterator[Scd2Row] = {
-      var cur = if (open.exists()) open.get() else null
-      val closed = Vector.newBuilder[Scd2Row]
-      for (e <- rows.toVector.sortBy(e => (e.ts, e.attr))) {
-        if (cur == null) cur = (e.attr, e.ts)
-        else if (e.attr != cur._1) {
-          closed += Scd2Row(key, cur._1, cur._2, Some(e.ts))
-          cur = (e.attr, e.ts)
-        } // same attr: consecutive duplicate, collapse
-      }
-      open.update(cur)
-      closed.result().iterator ++
-        Iterator(Scd2Row(key, cur._1, cur._2, None))
-    }
   }
 
   case class FunnelEvent(uid: Long, etype: String, ts: Long)
@@ -582,42 +421,6 @@ object StatefulOps {
       }
   }
 
-  /** [[transitionGate]] on the modern `transformWithState` API — the
-    * last-seen event type in a typed `ValueState[String]` on RocksDB;
-    * same cross-batch bigram emission, spec-asserted emission-equal to
-    * the legacy gate (which stays as the reference implementation).
-    * Requires the RocksDB provider like [[budgetGateTws]].
-    */
-  def transitionGateTws(events: Dataset[TransEvent]): Dataset[Transition] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.uid)
-      .transformWithState(new TransitionProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Append())
-  }
-
-  private final class TransitionProcessor
-      extends org.apache.spark.sql.streaming.StatefulProcessor[Long, TransEvent, Transition] {
-    @transient private var last: org.apache.spark.sql.streaming.ValueState[String] = _
-
-    override def init(outputMode: OutputMode,
-                      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      last = getHandle.getValueState[String]("last",
-        org.apache.spark.sql.Encoders.STRING,
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-
-    override def handleInputRows(uid: Long, rows: Iterator[TransEvent],
-        timerValues: org.apache.spark.sql.streaming.TimerValues): Iterator[Transition] = {
-      var prev = if (last.exists()) last.get() else null
-      val out = Vector.newBuilder[Transition]
-      for (e <- rows.toVector.sortBy(e => (e.ts, e.tie))) {
-        if (prev != null) out += Transition(prev, e.etype)
-        prev = e.etype
-      }
-      if (prev != null) last.update(prev)
-      out.result().iterator
-    }
-  }
-
   case class Keyed[V](key: String, ts: Long, value: V)
 
   /** KQ-11 streaming: last-write-wins upsert per key (store `Put`
@@ -638,44 +441,9 @@ object StatefulOps {
       }
   }
 
-  /** [[latestByKey]] on the modern `transformWithState` API — the same
-    * last-write-wins upsert (ties on ts resolve to the later element in
-    * batch order, kasper's serial-loop semantics), held in a typed
-    * `ValueState` on the RocksDB store instead of a
-    * `flatMapGroupsWithState` blob; flatMapGroupsWithState is
-    * deprecation-bound, so this is the forward path (the
-    * funnel/budget/transition/scd2 gate pattern applied to KQ-11). The
-    * spec asserts the two forms emit identical winners per batch.
-    */
-  def latestByKeyTws[V: Encoder](rows: Dataset[Keyed[V]]): Dataset[Keyed[V]] = {
-    implicit val keyedEnc: Encoder[Keyed[V]] = rows.encoder
-    import rows.sparkSession.implicits._
-    rows.groupByKey(_.key)
-      .transformWithState(new LatestByKeyProcessor[V](rows.encoder),
-        org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Update())
-  }
-
-  private final class LatestByKeyProcessor[V](enc: Encoder[Keyed[V]])
-      extends org.apache.spark.sql.streaming.StatefulProcessor[String, Keyed[V], Keyed[V]] {
-    @transient private var best: org.apache.spark.sql.streaming.ValueState[Keyed[V]] = _
-
-    override def init(outputMode: OutputMode,
-                      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      best = getHandle.getValueState[Keyed[V]]("best", enc,
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-
-    override def handleInputRows(key: String, rows: Iterator[Keyed[V]],
-        timerValues: org.apache.spark.sql.streaming.TimerValues): Iterator[Keyed[V]] = {
-      var b = if (best.exists()) best.get() else null.asInstanceOf[Keyed[V]]
-      rows.foreach { r => if (b == null || r.ts >= b.ts) b = r }
-      best.update(b)
-      Iterator(b)
-    }
-  }
-
   /** One CDC op: I/U carry the payload, D tombstones the key; `seq` is
     * the last-writer-wins order (ties resolve to the later element in
-    * batch order, the [[latestByKeyTws]] rule).
+    * batch order, the [[latestByKey]] rule).
     */
   case class CdcOp(key: String, seq: Long, op: String, payload: String)
 
@@ -827,193 +595,4 @@ object StatefulOps {
         Iterator(best)
       }
     }
-  }
-
-  /** [[resolveCharacters]] on the modern `transformWithState` API — the
-    * same two-stage entity-keyed topology's stage 1 (character-keyed
-    * resolution with the reverse re-emit), with the per-character state
-    * in a typed `ValueState[CharState]` on the RocksDB store;
-    * flatMapGroupsWithState is deprecation-bound, so this is the forward
-    * path (the budget/scd2/funnel/transition/latestByKey gate pattern
-    * applied to KQ-8). Emission-equal spec vs the legacy stage.
-    */
-  def resolveCharactersTws(input: Dataset[JoinInput]): Dataset[StageRecord] = {
-    import input.sparkSession.implicits._
-    val meta = input.flatMap(j =>
-      j.fiction.map(f => StageRecord(f.id, "meta", -1, None, Some(f))))
-    val keyed = input.flatMap {
-      case JoinInput(_, Some(c), _) => Seq(CharEvent(c.id, Some(c), None, -1))
-      case JoinInput(_, _, Some(f)) =>
-        f.characterIds.zipWithIndex.map { case (cid, pos) =>
-          CharEvent(cid, None, Some(f.id), pos)
-        }
-      case _ => Nil
-    }
-    val resolved = keyed.groupByKey(_.cid)
-      .transformWithState(new CharResolveProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Append())
-    meta.unionByName(resolved)
-  }
-
-  private final class CharResolveProcessor
-      extends org.apache.spark.sql.streaming.StatefulProcessor[String, CharEvent, StageRecord] {
-    @transient private var st: org.apache.spark.sql.streaming.ValueState[CharState] = _
-
-    override def init(outputMode: OutputMode,
-                      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      st = getHandle.getValueState[CharState]("char",
-        org.apache.spark.sql.Encoders.product[CharState],
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-
-    override def handleInputRows(cid: String, rows: Iterator[CharEvent],
-        timerValues: org.apache.spark.sql.streaming.TimerValues): Iterator[StageRecord] = {
-      var s = if (st.exists()) st.get() else CharState(None, Nil)
-      val out = scala.collection.mutable.ArrayBuffer.empty[StageRecord]
-      rows.foreach {
-        case CharEvent(_, Some(c), _, _) =>
-          s = s.copy(character = Some(c))
-          s.refs.foreach { case (fid, pos) =>
-            out += StageRecord(fid, "resolved", pos, Some(c), None)
-          }
-        case CharEvent(_, _, Some(fid), pos) =>
-          val ref = (fid, pos)
-          if (!s.refs.contains(ref)) s = s.copy(refs = s.refs :+ ref)
-          s.character.foreach(c =>
-            out += StageRecord(fid, "resolved", pos, Some(c), None))
-        case _ => ()
-      }
-      st.update(s)
-      out.iterator
-    }
-  }
-
-  /** [[assembleFictions]] on `transformWithState` — stage 2 of the
-    * entity-keyed topology (fiction-keyed assembly with emit
-    * suppression), per-fiction state in a typed
-    * `ValueState[FictionAsmState]`. Emission-equal spec vs the legacy
-    * stage; chains after [[resolveCharactersTws]] exactly as the legacy
-    * stages chain.
-    */
-  def assembleFictionsTws(stage: Dataset[StageRecord]): Dataset[FictionAndCharacters] = {
-    import stage.sparkSession.implicits._
-    stage.groupByKey(_.fictionId)
-      .transformWithState(new FictionAsmProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Update())
-  }
-
-  /** [[FictionAsmState]] with the resolved map flattened to an array of
-    * (pos, character) structs — the transformWithState state encoder is
-    * Avro-backed, and Avro maps require STRING keys, so `Map[Int, _]`
-    * is not encodable as state (the legacy `GroupState` form uses the
-    * catalyst encoder, which allows it).
-    */
-  private case class FictionAsmStateTws(fiction: Option[Fiction],
-                                        resolved: Seq[(Int, Character)])
-
-  private final class FictionAsmProcessor
-      extends org.apache.spark.sql.streaming.StatefulProcessor[String, StageRecord, FictionAndCharacters] {
-    @transient private var st: org.apache.spark.sql.streaming.ValueState[FictionAsmStateTws] = _
-
-    override def init(outputMode: OutputMode,
-                      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      st = getHandle.getValueState[FictionAsmStateTws]("asm",
-        org.apache.spark.sql.Encoders.product[FictionAsmStateTws],
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-
-    override def handleInputRows(fictionId: String, rows: Iterator[StageRecord],
-        timerValues: org.apache.spark.sql.streaming.TimerValues): Iterator[FictionAndCharacters] = {
-      val stored = if (st.exists()) st.get() else FictionAsmStateTws(None, Nil)
-      var s = FictionAsmState(stored.fiction, stored.resolved.toMap)
-      var dirty = false
-      rows.foreach { r =>
-        if (r.kind == "meta") {
-          val f = r.fiction.get
-          val valid = s.resolved.filter { case (pos, c) =>
-            pos < f.characterIds.length && f.characterIds(pos) == c.id
-          }
-          s = FictionAsmState(Some(f), valid); dirty = true
-        } else r.character.foreach { c =>
-          val ok = s.fiction.forall(f =>
-            r.pos < f.characterIds.length && f.characterIds(r.pos) == c.id)
-          if (ok) { s = s.copy(resolved = s.resolved + (r.pos -> c)); dirty = true }
-        }
-      }
-      st.update(FictionAsmStateTws(s.fiction, s.resolved.toSeq))
-      val complete = for {
-        f <- s.fiction
-        if dirty && f.characterIds.indices.forall(s.resolved.contains)
-      } yield FictionAndCharacters(f.id, f.fictionType, f.title,
-        f.characterIds.indices.map(s.resolved).toSeq)
-      complete.iterator
-    }
-  }
-
-  /** [[fictionsJoin]] on `transformWithState` — the partition-keyed
-    * characters⋈fictions topology with the state decomposed into three
-    * typed `MapState`s (characters, fictions, char→fictions reverse
-    * index) instead of one partition-sized `GroupState` blob. THIS is
-    * the scale win of the port: each entity is its own RocksDB row, so
-    * a micro-batch touching k entities reads/writes O(k) state rows,
-    * where the legacy form deserializes and rewrites the ENTIRE
-    * partition state (every character and fiction ever seen) on every
-    * batch — the difference between O(batch) and O(history) state I/O
-    * per trigger. Same co-partitioning contract and emit rules as
-    * [[fictionsJoin]]; emission-equal spec, including the
-    * character-update re-emit path through the reverse index.
-    */
-  def fictionsJoinTws(input: Dataset[JoinInput]): Dataset[FictionAndCharacters] = {
-    import input.sparkSession.implicits._
-    input.groupByKey(_.partition)
-      .transformWithState(new FictionsJoinProcessor(implicitly[Encoder[Seq[String]]]),
-        org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Update())
-  }
-
-  private final class FictionsJoinProcessor(seqEnc: Encoder[Seq[String]])
-      extends org.apache.spark.sql.streaming.StatefulProcessor[Int, JoinInput, FictionAndCharacters] {
-    import org.apache.spark.sql.streaming.{MapState, TTLConfig}
-    import org.apache.spark.sql.Encoders
-    @transient private var chars: MapState[String, Character] = _
-    @transient private var fics: MapState[String, Fiction] = _
-    @transient private var rev: MapState[String, Seq[String]] = _
-
-    override def init(outputMode: OutputMode,
-                      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit = {
-      chars = getHandle.getMapState[String, Character]("characters",
-        Encoders.STRING, Encoders.product[Character], TTLConfig.NONE)
-      fics = getHandle.getMapState[String, Fiction]("fictions",
-        Encoders.STRING, Encoders.product[Fiction], TTLConfig.NONE)
-      rev = getHandle.getMapState[String, Seq[String]]("charToFictions",
-        Encoders.STRING, seqEnc, TTLConfig.NONE)
-    }
-
-    override def handleInputRows(partition: Int, msgs: Iterator[JoinInput],
-        timerValues: org.apache.spark.sql.streaming.TimerValues): Iterator[FictionAndCharacters] = {
-      val out = scala.collection.mutable.LinkedHashMap.empty[String, FictionAndCharacters]
-
-      def tryEmit(f: Fiction): Unit = {
-        val resolved = f.characterIds.flatMap(cid =>
-          if (chars.containsKey(cid)) Some(chars.getValue(cid)) else None)
-        if (resolved.size == f.characterIds.size)
-          out(f.id) = FictionAndCharacters(f.id, f.fictionType, f.title, resolved)
-      }
-
-      msgs.foreach {
-        case JoinInput(_, Some(c), _) =>
-          chars.updateValue(c.id, c)
-          val affected = if (rev.containsKey(c.id)) rev.getValue(c.id) else Nil
-          affected.flatMap(fid =>
-              if (fics.containsKey(fid)) Some(fics.getValue(fid)) else None)
-            .sortBy(_.id).foreach(tryEmit)
-        case JoinInput(_, _, Some(f)) =>
-          f.characterIds.foreach { cid =>
-            val cur = if (rev.containsKey(cid)) rev.getValue(cid) else Nil
-            if (!cur.contains(f.id)) rev.updateValue(cid, cur :+ f.id)
-          }
-          fics.updateValue(f.id, f)
-          tryEmit(f)
-        case _ => ()
-      }
-      out.values.iterator
-    }
-  }
-}
+  }}

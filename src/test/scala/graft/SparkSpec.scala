@@ -52,6 +52,19 @@ trait SparkSpec extends AnyFunSuite {
     jobsInGroup(group).size
   }
 
+  /** Run `body` with the RocksDB state store provider set on the session,
+    * then restore the provider conf it found (or unset it).
+    */
+  def withRocksDbStateStore[T](body: => T): T = {
+    val key = "spark.sql.streaming.stateStore.providerClass"
+    val prev = spark.conf.getOption(key)
+    graft.core.Graft.useRocksDbStateStore(spark)
+    try body finally prev match {
+      case Some(p) => spark.conf.set(key, p)
+      case None => spark.conf.unset(key)
+    }
+  }
+
   /** All WindowExec nodes under the plan of `df`, through AQE. */
   def windowNodes(df: org.apache.spark.sql.DataFrame):
       Seq[org.apache.spark.sql.execution.window.WindowExec] =

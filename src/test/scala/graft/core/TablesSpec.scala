@@ -49,10 +49,27 @@ class TablesSpec extends SparkSpec {
       graft.queries.Queries.q07_join(spark, sfDir)
       ()
     }
-    // q01's events read sets nanosAsLong session-wide, and that conf is
-    // part of the key: lineitem, read before it, is cached under both
-    build(); build()
+    // one build infers and caches every table it reads, including
+    // lineitem read before q01's events read
+    build()
     assert(jobsDuring(build()) == 0)
+  }
+
+  test("reading events changes no session conf, so a table read before and after it is inferred once") {
+    // a new session starts from the built confs, whatever earlier specs read
+    val s = spark.newSession()
+    withTempDir { d =>
+      // fresh paths, so the first read of each is a miss
+      for (t <- Seq("region", "events"))
+        Files.copy(Paths.get(s"$sfDir/$t.parquet"), d.resolve(s"$t.parquet"))
+      val confs = s.conf.getAll
+      assert(jobsDuring { Tables(s, d.toString).region; () } >= 1, "first read must infer")
+      Tables(s, d.toString).events
+      val after = s.conf.getAll
+      assert(after == confs, s"set: ${after.toSet -- confs.toSet}, unset: ${confs.toSet -- after.toSet}")
+      assert(jobsDuring { Tables(s, d.toString).region; () } == 0,
+        "a read after events must hit the schema cached before it")
+    }
   }
 
   test("a file rewritten at the same path is read with its new schema") {
@@ -88,7 +105,6 @@ class TablesSpec extends SparkSpec {
   test("events reads identically with and without a cached schema (micros and nanos ts)") {
     /** The read before the cache: plain inference plus the same ts adaptation. */
     def uncached(dir: Path): DataFrame = {
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val raw = spark.read.parquet(s"$dir/events.parquet")
       if (raw.schema("ts").dataType == LongType)
         raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))

@@ -120,78 +120,6 @@ class GoldenParitySpec extends SparkSpec {
     assert(finalByKey == golden)
   }
 
-  /** Run `gate` over the golden seed in the adversarial order (fictions
-    * first, everything resolving via state) and fold the emissions to
-    * the final per-key value, as the reference consumer does.
-    */
-  private def runGolden(gate: org.apache.spark.sql.Dataset[JoinInput]
-      => org.apache.spark.sql.Dataset[FictionAndCharacters],
-      name: String): Map[String, FictionAndCharacters] = {
-    val in = MemoryStream[JoinInput]
-    val q = gate(in.toDS())
-      .writeStream.format("memory").queryName(name)
-      .outputMode(OutputMode.Update()).start()
-    in.addData(seedFictions.map(f => JoinInput(0, None, Some(f))))
-    q.processAllAvailable()
-    assert(spark.table(name).count() == 0, "no characters yet — all emits suppressed")
-    in.addData(seedCharacters.map(c => JoinInput(0, Some(c), None)))
-    q.processAllAvailable()
-    val rows = spark.table(name).as[FictionAndCharacters].collect()
-    q.stop()
-    rows.zipWithIndex.groupBy(_._1.id).map { case (k, vs) => k -> vs.maxBy(_._2)._1 }
-  }
-
-  test("fictionsJoinTws (MapState decomposition) emits exactly as the legacy blob form on the golden seed") {
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    graft.core.Graft.useRocksDbStateStore(spark)
-    try {
-      val tws = runGolden(StatefulOps.fictionsJoinTws(_), "golden_tws")
-      assert(tws == golden)
-      // emission-equal vs legacy under the same batch schedule: the
-      // re-emit path through the MapState reverse index must fire for
-      // exactly the fictions the legacy reverse index re-emits
-      val legacy = runGolden(StatefulOps.fictionsJoin(_), "golden_tws_legacy")
-      assert(tws == legacy)
-    } finally prev match {
-      case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
-  }
-
-  test("two-stage Tws chain (resolveCharactersTws → assembleFictionsTws) reproduces the golden output") {
-    import graft.streaming.StatefulOps
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    graft.core.Graft.useRocksDbStateStore(spark)
-    val work = java.nio.file.Files.createTempDirectory("graft_twostage_tws").toString
-    try {
-      val in = MemoryStream[JoinInput]
-      val q1 = StatefulOps.resolveCharactersTws(in.toDS())
-        .writeStream.format("parquet")
-        .option("path", s"$work/stage").option("checkpointLocation", s"$work/ckpt1")
-        .outputMode(OutputMode.Append()).start()
-      val stage = spark.readStream
-        .schema(Seq.empty[StatefulOps.StageRecord].toDS().schema)
-        .parquet(s"$work/stage").as[StatefulOps.StageRecord]
-      val q2 = StatefulOps.assembleFictionsTws(stage)
-        .writeStream.format("memory").queryName("golden_two_stage_tws")
-        .outputMode(OutputMode.Update()).start()
-      in.addData(seedFictions.map(f => JoinInput(0, None, Some(f))))
-      q1.processAllAvailable(); q2.processAllAvailable()
-      assert(spark.table("golden_two_stage_tws").count() == 0,
-        "no characters yet — assembly suppressed")
-      in.addData(seedCharacters.map(c => JoinInput(0, Some(c), None)))
-      q1.processAllAvailable(); q2.processAllAvailable()
-      val rows = spark.table("golden_two_stage_tws").as[FictionAndCharacters].collect()
-      q1.stop(); q2.stop()
-      val finalByKey = rows.zipWithIndex.groupBy(_._1.id)
-        .map { case (k, vs) => k -> vs.maxBy(_._2)._1 }
-      assert(finalByKey == golden)
-    } finally prev match {
-      case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
-  }
-
   test("StatefulOps.fictionsJoin converges to the golden output when fictions arrive first") {
     val in = MemoryStream[JoinInput]
     val q = StatefulOps.fictionsJoin(in.toDS())

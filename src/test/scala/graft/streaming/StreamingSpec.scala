@@ -928,9 +928,7 @@ class StreamingSpec extends SparkSpec {
         CdcOp("b", 4, "D", "")),
       Seq(CdcOp("a", 4, "U", "late-ignored"), // older seq than state: no-op
         CdcOp("b", 6, "I", "b2")))            // delete-then-reinsert
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    graft.core.Graft.useRocksDbStateStore(spark)
-    try {
+    withRocksDbStateStore {
       val in = MemoryStream[CdcOp]
       val table = scala.collection.mutable.Map.empty[String, (Long, String)]
       val q = StatefulOps.cdcGateTws(in.toDS())
@@ -961,9 +959,6 @@ class StreamingSpec extends SparkSpec {
       // final image: late op ignored, b re-inserted
       assert(table.toMap == Map("a" -> ((5L, "a2")), "b" -> ((6L, "b2")),
         "c" -> ((3L, "c1"))))
-    } finally prev match {
-      case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 
@@ -1010,7 +1005,7 @@ class StreamingSpec extends SparkSpec {
       s"median trigger $medianTriggerMs ms exceeds the ~1s design latency")
   }
 
-  test("DedupGroupMaintainerTws equals the legacy maintainer and batch nearDupGroups on RocksDB, incl. a two-group bridge") {
+  test("DedupGroupMaintainer snapshots across a two-group bridge batch equal batch nearDupGroups") {
     // two exact-dup groups {1,2}=X and {7,8}=Y, an unrelated singleton,
     // and a BRIDGE doc 9 = X ++ Y arriving last: jaccard(X,Z) =
     // jaccard(Y,Z) = 6/14 ≈ 0.43 ≥ the 0.4 threshold while
@@ -1025,63 +1020,34 @@ class StreamingSpec extends SparkSpec {
       Seq((1L, X), (7L, Y), (4L, "totally different content nothing shared anywhere today")),
       Seq((2L, X), (8L, Y)),
       Seq((9L, Z)))
-    val allDocs = batches.flatten
-    def drive(ingest: org.apache.spark.sql.DataFrame => Unit,
-              labels: () => Set[(Long, Long, Boolean)]): Seq[Set[(Long, Long, Boolean)]] = {
-      val in = MemoryStream[(Long, String)]
-      val q = in.toDF().toDF("doc_id", "text").writeStream
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) => ingest(b) }
-        .outputMode(OutputMode.Append()).start()
-      val snaps = batches.map { b =>
-        in.addData(b: _*); q.processAllAvailable(); labels()
-      }
-      q.stop()
-      snaps
+    val m = new DedupGroupMaintainer("text", "doc_id", bandings = Seq(32), threshold = 0.4)
+    val in = MemoryStream[(Long, String)]
+    val q = in.toDF().toDF("doc_id", "text").writeStream
+      .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) => m.ingest(b) }
+      .outputMode(OutputMode.Append()).start()
+    val snaps = batches.map { b =>
+      in.addData(b: _*); q.processAllAvailable()
+      m.labels(spark).as[(Long, Long, Boolean)].collect().toSet
     }
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    graft.core.Graft.useRocksDbStateStore(spark)
-    try {
-      val tws = new DedupGroupMaintainerTws("text", "doc_id",
-        bandings = Seq(32), threshold = 0.4)(spark)
-      val twsSnaps = drive(tws.ingest,
-        () => tws.labels(spark).as[(Long, Long, Boolean)].collect().toSet)
-      tws.close()
-      // the DE-DRIVERED gate feed (banded frame → file source, no
-      // driver collect of banded rows) must emit identically at every
-      // batch boundary
-      val twsF = new DedupGroupMaintainerTws("text", "doc_id",
-        bandings = Seq(32), threshold = 0.4, driverFeed = false)(spark)
-      val twsFSnaps = drive(twsF.ingest,
-        () => twsF.labels(spark).as[(Long, Long, Boolean)].collect().toSet)
-      twsF.close()
-      assert(twsFSnaps == twsSnaps,
-        s"frame-fed gate snapshots $twsFSnaps != driver-fed $twsSnaps")
-      val legacy = new DedupGroupMaintainer("text", "doc_id",
-        bandings = Seq(32), threshold = 0.4)
-      val legacySnaps = drive(legacy.ingest,
-        () => legacy.labels(spark).as[(Long, Long, Boolean)].collect().toSet)
-      legacy.close()
-      // emission-equal at EVERY batch boundary, not just at the end
-      assert(twsSnaps == legacySnaps,
-        s"tws snapshots ${twsSnaps} != legacy ${legacySnaps}")
-      // before the bridge: two separate groups
-      assert(twsSnaps(1) == Set((1L, 1L, true), (2L, 1L, false),
-        (7L, 7L, true), (8L, 7L, false), (4L, 4L, true)),
-        s"pre-bridge labels: ${twsSnaps(1)}")
-      // the bridge batch merges BOTH prior groups (and 9) under min id 1
-      assert(twsSnaps(2) == Set((1L, 1L, true), (2L, 1L, false),
-        (7L, 1L, false), (8L, 1L, false), (9L, 1L, false), (4L, 4L, true)),
-        s"post-bridge labels: ${twsSnaps(2)}")
-      // and the incremental result equals the one-shot batch computation
-      val batch = graft.dedup.Dedup.nearDupGroups(
-          allDocs.toDF("doc_id", "text"), "text", "doc_id",
-          bands = 32, threshold = 0.4)
-        .as[(Long, Long, Boolean)].collect().toSet
-      assert(twsSnaps(2) == batch, s"incremental ${twsSnaps(2)} != batch $batch")
-    } finally prev match {
-      case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
+    q.stop()
+    m.close()
+    // no pair yet: three singletons
+    assert(snaps(0) == Set((1L, 1L, true), (7L, 7L, true), (4L, 4L, true)),
+      s"first-batch labels: ${snaps(0)}")
+    // before the bridge: two separate groups
+    assert(snaps(1) == Set((1L, 1L, true), (2L, 1L, false),
+      (7L, 7L, true), (8L, 7L, false), (4L, 4L, true)),
+      s"pre-bridge labels: ${snaps(1)}")
+    // the bridge batch merges BOTH prior groups (and 9) under min id 1
+    assert(snaps(2) == Set((1L, 1L, true), (2L, 1L, false),
+      (7L, 1L, false), (8L, 1L, false), (9L, 1L, false), (4L, 4L, true)),
+      s"post-bridge labels: ${snaps(2)}")
+    // and the incremental result equals the one-shot batch computation
+    val batch = graft.dedup.Dedup.nearDupGroups(
+        batches.flatten.toDF("doc_id", "text"), "text", "doc_id",
+        bands = 32, threshold = 0.4)
+      .as[(Long, Long, Boolean)].collect().toSet
+    assert(snaps(2) == batch, s"incremental ${snaps(2)} != batch $batch")
   }
 
   test("declarative stream-stream inner join with watermarks (KQ-8 streaming alt)") {
@@ -1153,9 +1119,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("runningCount on the RocksDB state store (A10/A11 scale path)") {
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    graft.core.Graft.useRocksDbStateStore(spark)
-    try {
+    withRocksDbStateStore {
       val in = MemoryStream[String]
       val q = StatefulOps.runningCount(in.toDS())
         .writeStream.format("memory").queryName(nextName())
@@ -1166,38 +1130,6 @@ class StreamingSpec extends SparkSpec {
         .groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).max }
       q.stop()
       assert(m == Map("r" -> 3L, "s" -> 1L))
-    } finally prev match {
-      case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
-  }
-
-  test("runningCountTws with a TTL runs under ProcessingTime time mode (regression)") {
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    graft.core.Graft.useRocksDbStateStore(spark)
-    try {
-      val in = MemoryStream[String]
-      // TTL requires ProcessingTime mode — this crashed at query start
-      // when the mode was hardcoded to None
-      val q = StatefulOps.runningCountTws(in.toDS(),
-          ttl = Some(java.time.Duration.ofMinutes(30)))
-        .writeStream.format("memory").queryName(nextName())
-        .outputMode(OutputMode.Update()).start()
-      in.addData("x", "x", "y")
-      // NOTE: under ProcessingTime time mode the engine keeps scheduling
-      // timer batches, so processAllAvailable never settles — poll the
-      // sink for the expected counts instead
-      org.scalatest.concurrent.Eventually.eventually(
-        org.scalatest.concurrent.Eventually.timeout(org.scalatest.time.Span(30,
-          org.scalatest.time.Seconds))) {
-        val m = spark.table(q.name).as[(String, Long)].collect()
-          .groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).max }
-        assert(m == Map("x" -> 2L, "y" -> 1L))
-      }
-      q.stop()
-    } finally prev match {
-      case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 
@@ -1252,151 +1184,93 @@ class StreamingSpec extends SparkSpec {
     SinkOps.bulkWrite(Seq("a", "b").toDS(), identity[String])(_ => ())
   }
 
-  test("runningCountTws: transformWithState typed state on RocksDB (modern scale path)") {
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    graft.core.Graft.useRocksDbStateStore(spark)
-    try {
-      val in = MemoryStream[String]
-      val q = StatefulOps.runningCountTws(in.toDS())
-        .writeStream.format("memory").queryName(nextName())
-        .outputMode(OutputMode.Update()).start()
-      in.addData("a", "b", "a"); q.processAllAvailable()
-      in.addData("a"); q.processAllAvailable()
-      val m = spark.table(q.name).as[(String, Long)].collect()
-        .groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).max }
-      q.stop()
-      assert(m == Map("a" -> 3L, "b" -> 1L))
-    } finally prev match {
-      case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
-  }
-
-  test("scd2GateTws on transformWithState emits identically to scd2Gate") {
+  test("scd2Gate emits the pinned closed and open rows per batch on the RocksDB state store") {
     import StatefulOps.{Scd2Event, Scd2Row}
-    val batch1 = Seq(Scd2Event(1, 10, "a"), Scd2Event(1, 20, "a"),
-      Scd2Event(1, 30, "b"), Scd2Event(2, 5, "x"))
-    val batch2 = Seq(Scd2Event(1, 40, "a"), Scd2Event(2, 50, "x"))
-    def run(gate: org.apache.spark.sql.Dataset[Scd2Event]
-        => org.apache.spark.sql.Dataset[Scd2Row]): Seq[Scd2Row] = {
+    withRocksDbStateStore {
       val in = MemoryStream[Scd2Event]
-      val q = gate(in.toDS())
+      val q = StatefulOps.scd2Gate(in.toDS())
         .writeStream.format("memory").queryName(nextName())
         .outputMode(OutputMode.Update()).start()
-      in.addData(batch1: _*); q.processAllAvailable()
-      in.addData(batch2: _*); q.processAllAvailable()
-      val rows = spark.table(q.name).as[Scd2Row].collect().toSeq
+      def rows(): Seq[Scd2Row] = spark.table(q.name).as[Scd2Row].collect().toSeq
+        .sortBy(r => (r.key, r.validFrom, r.validTo.getOrElse(Long.MaxValue)))
+      // batch 1: k1 a@10, a@20 (collapse), b@30 closes a; k2 opens x@5
+      in.addData(Scd2Event(1, 10, "a"), Scd2Event(1, 20, "a"),
+        Scd2Event(1, 30, "b"), Scd2Event(2, 5, "x"))
+      q.processAllAvailable()
+      assert(rows() == Seq(Scd2Row(1, "a", 10, Some(30)), Scd2Row(1, "b", 30, None),
+        Scd2Row(2, "x", 5, None)))
+      // batch 2: k1 returns to a@40 (closes b); k2 re-emits its open x@5
+      in.addData(Scd2Event(1, 40, "a"), Scd2Event(2, 50, "x"))
+      q.processAllAvailable()
+      val all = rows()
       q.stop()
-      rows.sortBy(r => (r.key, r.validFrom, r.validTo.getOrElse(Long.MaxValue)))
-    }
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    graft.core.Graft.useRocksDbStateStore(spark)
-    try {
-      val tws = run(StatefulOps.scd2GateTws(_))
-      val legacy = run(StatefulOps.scd2Gate(_))
-      assert(tws == legacy, s"tws $tws != legacy $legacy")
-    } finally prev match {
-      case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+      assert(all == Seq(Scd2Row(1, "a", 10, Some(30)), Scd2Row(1, "b", 30, Some(40)),
+        Scd2Row(1, "b", 30, None), Scd2Row(1, "a", 40, None),
+        Scd2Row(2, "x", 5, None), Scd2Row(2, "x", 5, None)))
     }
   }
 
-  test("budgetGateTws on transformWithState admits identically to budgetGate") {
+  test("budgetGate admits the pinned cumTokens on the RocksDB state store") {
     import StatefulOps.{BudgetDoc, Admitted}
-    val batch1 = Seq(BudgetDoc("a", 1, 60), BudgetDoc("a", 2, 50),
-      BudgetDoc("a", 3, 30), BudgetDoc("b", 5, 90))
-    val batch2 = Seq(BudgetDoc("a", 4, 20), BudgetDoc("a", 6, 10), BudgetDoc("b", 7, 20))
-    def run(gate: org.apache.spark.sql.Dataset[BudgetDoc]
-        => org.apache.spark.sql.Dataset[Admitted]): Seq[Admitted] = {
+    withRocksDbStateStore {
       val in = MemoryStream[BudgetDoc]
-      val q = gate(in.toDS())
+      val q = StatefulOps.budgetGate(in.toDS(), budget = 100L)
         .writeStream.format("memory").queryName(nextName())
         .outputMode(OutputMode.Update()).start()
-      in.addData(batch1: _*); q.processAllAvailable()
-      in.addData(batch2: _*); q.processAllAvailable()
+      in.addData(BudgetDoc("a", 1, 60), BudgetDoc("a", 2, 50),
+        BudgetDoc("a", 3, 30), BudgetDoc("b", 5, 90))
+      q.processAllAvailable()
+      in.addData(BudgetDoc("a", 4, 20), BudgetDoc("a", 6, 10), BudgetDoc("b", 7, 20))
+      q.processAllAvailable()
       val rows = spark.table(q.name).as[Admitted].collect().toSeq
       q.stop()
-      rows.sortBy(a => (a.domain, a.id))
-    }
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    graft.core.Graft.useRocksDbStateStore(spark)
-    try {
-      val tws = run(StatefulOps.budgetGateTws(_, budget = 100L))
-      val legacy = run(StatefulOps.budgetGate(_, budget = 100L))
-      assert(tws == legacy, s"tws $tws != legacy $legacy")
-      assert(tws.map(r => r.id -> r.cumTokens).toMap ==
+      assert(rows.map(r => r.id -> r.cumTokens).toMap ==
         Map(1L -> 60L, 3L -> 90L, 5L -> 90L, 6L -> 100L))
-    } finally prev match {
-      case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 
-  test("transitionGateTws on transformWithState emits the same bigrams as transitionGate") {
+  test("transitionGate bigram counts on the RocksDB state store") {
     import StatefulOps.{TransEvent, Transition}
-    val batch1 = Seq(TransEvent(1, "b", 20L, 2), TransEvent(1, "a", 10L, 1),
-      TransEvent(2, "a", 5L, 3))
-    val batch2 = Seq(TransEvent(1, "a", 30L, 4), TransEvent(2, "c", 15L, 5))
-    def run(gate: org.apache.spark.sql.Dataset[TransEvent]
-        => org.apache.spark.sql.Dataset[Transition]): Map[Transition, Long] = {
+    withRocksDbStateStore {
       val in = MemoryStream[TransEvent]
-      val q = gate(in.toDS())
+      val q = StatefulOps.transitionGate(in.toDS())
         .writeStream.format("memory").queryName(nextName())
         .outputMode(OutputMode.Append()).start()
-      in.addData(batch1: _*); q.processAllAvailable()
-      in.addData(batch2: _*); q.processAllAvailable()
-      val rows = spark.table(q.name).as[Transition].collect()
+      in.addData(TransEvent(1, "b", 20L, 2), TransEvent(1, "a", 10L, 1),
+        TransEvent(2, "a", 5L, 3))
+      q.processAllAvailable()
+      in.addData(TransEvent(1, "a", 30L, 4), TransEvent(2, "c", 15L, 5))
+      q.processAllAvailable()
+      val counts = spark.table(q.name).as[Transition].collect()
+        .groupBy(identity).view.mapValues(_.length.toLong).toMap
       q.stop()
-      rows.groupBy(identity).view.mapValues(_.length.toLong).toMap
-    }
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    graft.core.Graft.useRocksDbStateStore(spark)
-    try {
-      val tws = run(StatefulOps.transitionGateTws(_))
-      val legacy = run(StatefulOps.transitionGate(_))
-      assert(tws == legacy, s"tws $tws != legacy $legacy")
-      assert(tws == Map(Transition("a", "b") -> 1L, Transition("b", "a") -> 1L,
+      assert(counts == Map(Transition("a", "b") -> 1L, Transition("b", "a") -> 1L,
         Transition("a", "c") -> 1L))
-    } finally prev match {
-      case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 
-  test("funnelGateTws on transformWithState emits the same progressions as funnelGate") {
+  test("funnelGate stages per user on the RocksDB state store") {
     import StatefulOps.{FunnelEvent, FunnelProgress}
     val steps = Seq("view", "click", "purchase")
-    val batch1 = Seq(FunnelEvent(1, "click", 20L), FunnelEvent(1, "view", 10L),
-      FunnelEvent(2, "view", 5L), FunnelEvent(3, "click", 7L))
-    val batch2 = Seq(FunnelEvent(1, "purchase", 90L), FunnelEvent(2, "click", 300L),
-      FunnelEvent(3, "view", 10L))
-    def run(gate: org.apache.spark.sql.Dataset[FunnelEvent]
-        => org.apache.spark.sql.Dataset[FunnelProgress]): Seq[FunnelProgress] = {
+    withRocksDbStateStore {
       val in = MemoryStream[FunnelEvent]
-      val q = gate(in.toDS())
+      val q = StatefulOps.funnelGate(in.toDS(), steps, within = 100L)
         .writeStream.format("memory").queryName(nextName())
         .outputMode(OutputMode.Update()).start()
-      in.addData(batch1: _*); q.processAllAvailable()
-      in.addData(batch2: _*); q.processAllAvailable()
+      in.addData(FunnelEvent(1, "click", 20L), FunnelEvent(1, "view", 10L),
+        FunnelEvent(2, "view", 5L), FunnelEvent(3, "click", 7L))
+      q.processAllAvailable()
+      in.addData(FunnelEvent(1, "purchase", 90L), FunnelEvent(2, "click", 300L),
+        FunnelEvent(3, "view", 10L))
+      q.processAllAvailable()
       val rows = spark.table(q.name).as[FunnelProgress].collect().toSeq
+        .sortBy(p => (p.uid, p.stage))
       q.stop()
-      rows.sortBy(p => (p.uid, p.stage))
-    }
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    graft.core.Graft.useRocksDbStateStore(spark)
-    try {
-      val tws = run(StatefulOps.funnelGateTws(_, steps, within = 100L))
-      val legacy = run(StatefulOps.funnelGate(_, steps, within = 100L))
-      assert(tws == legacy, s"tws $tws != legacy $legacy")
       // u1 completes the funnel (view@10 → click@20 → purchase@90);
       // u2's click at 300 misses the 100-tick window; u3's view can't
       // follow a click
-      assert(tws.filter(_.uid == 1).map(_.stage).max == 3)
-      assert(tws.filter(_.uid == 2).map(_.stage).max == 1)
-      assert(tws.filter(_.uid == 3).map(_.stage).max == 1)
-    } finally prev match {
-      case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+      assert(rows == Seq(FunnelProgress(1, 2, 20L), FunnelProgress(1, 3, 90L),
+        FunnelProgress(2, 1, 5L), FunnelProgress(3, 1, 10L)))
     }
   }
 
@@ -1418,9 +1292,7 @@ class StreamingSpec extends SparkSpec {
       AttrEvent(2, 6 * M, 8, "purchase", 2.5),
       AttrEvent(3, 0, 9, "view", 0.0),
       AttrEvent(3, 40 * M, 10, "purchase", 5.0))
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    graft.core.Graft.useRocksDbStateStore(spark)
-    try {
+    withRocksDbStateStore {
       val in = MemoryStream[AttrEvent]
       val q = StatefulOps.linearAttributionGateTws(in.toDS(), "purchase",
           gapTicks = 30 * M)
@@ -1449,48 +1321,34 @@ class StreamingSpec extends SparkSpec {
       assert(agg("view") == (2L, 1L, 666667L), s"view: $agg")
       assert(agg("click") == (3L, 2L, 333333L + 2500000L), s"click: $agg")
       spark.catalog.clearCache()
-    } finally prev match {
-      case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 
-  test("latestByKeyTws on transformWithState emits the same winners as latestByKey") {
+  test("latestByKey winners per batch on the RocksDB state store, a ts tie going to the later element") {
     import StatefulOps.Keyed
-    val batch1 = Seq(Keyed("u1", 10L, "old"), Keyed("u2", 5L, "x"))
-    val batch2 = Seq(Keyed("u1", 20L, "new"), Keyed("u1", 15L, "stale"),
-      Keyed("u2", 5L, "tie-later")) // ts tie → later element in batch order wins
-    def run(gate: org.apache.spark.sql.Dataset[Keyed[String]]
-        => org.apache.spark.sql.Dataset[Keyed[String]]): Seq[Keyed[String]] = {
+    withRocksDbStateStore {
       val in = MemoryStream[Keyed[String]]
-      val q = gate(in.toDS())
+      val q = StatefulOps.latestByKey(in.toDS())
         .writeStream.format("memory").queryName(nextName())
         .outputMode(OutputMode.Update()).start()
-      in.addData(batch1: _*); q.processAllAvailable()
-      in.addData(batch2: _*); q.processAllAvailable()
+      in.addData(Keyed("u1", 10L, "old"), Keyed("u2", 5L, "x"))
+      q.processAllAvailable()
+      in.addData(Keyed("u1", 20L, "new"), Keyed("u1", 15L, "stale"),
+        Keyed("u2", 5L, "tie-later")) // ts tie → later element in batch order wins
+      q.processAllAvailable()
       val rows = spark.table(q.name).as[Keyed[String]].collect().toSeq
+        .sortBy(k => (k.key, k.ts, k.value))
       q.stop()
-      rows.sortBy(k => (k.key, k.ts, k.value))
-    }
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    graft.core.Graft.useRocksDbStateStore(spark)
-    try {
-      val tws = run(StatefulOps.latestByKeyTws(_))
-      val legacy = run(StatefulOps.latestByKey(_))
-      assert(tws == legacy, s"tws $tws != legacy $legacy")
-      val last = tws.groupBy(_.key).map { case (k, vs) => k -> vs.maxBy(_.ts).value }
+      assert(rows == Seq(Keyed("u1", 10L, "old"), Keyed("u1", 20L, "new"),
+        Keyed("u2", 5L, "tie-later"), Keyed("u2", 5L, "x")))
+      val last = rows.groupBy(_.key).map { case (k, vs) => k -> vs.maxBy(_.ts).value }
       assert(last == Map("u1" -> "new", "u2" -> "tie-later"))
-    } finally prev match {
-      case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 
   test("chunkDedupGate: first-seen chunks pass, replays suppressed, batch winners match chunkDedup") {
     import StatefulOps.ChunkRow
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    graft.core.Graft.useRocksDbStateStore(spark)
-    try {
+    withRocksDbStateStore {
       val in = MemoryStream[ChunkRow]
       val q = StatefulOps.chunkDedupGate(in.toDS())
         .writeStream.format("memory").queryName(nextName())
@@ -1518,9 +1376,6 @@ class StreamingSpec extends SparkSpec {
         .flatMap { case (id, _, txt) => txt.split(" ").grouped(3).map(_.mkString(" ")).map(id -> _) }
         .toSet
       assert(got.map(c => c.id -> c.chunkText) == batchWinners)
-    } finally prev match {
-      case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 
@@ -1546,16 +1401,14 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("chunkDedupGate state survives a checkpointed restart (transformWithState + RocksDB recovery)") {
-    // the recovery story for the FORWARD-path state API: a chunk seen
+    // the recovery story for the transformWithState API: a chunk seen
     // before the restart must still be suppressed after it — the
     // ValueState row comes back from the RocksDB checkpoint, not from
     // reprocessing
     import StatefulOps.ChunkRow
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    graft.core.Graft.useRocksDbStateStore(spark)
     val ckpt = java.nio.file.Files.createTempDirectory("graft_tws_restart").toString
     val buf = scala.collection.mutable.ArrayBuffer.empty[ChunkRow]
-    try {
+    withRocksDbStateStore {
       val in = MemoryStream[ChunkRow]
       def start() = StatefulOps.chunkDedupGate(in.toDS())
         .writeStream.outputMode(OutputMode.Append())
@@ -1573,9 +1426,6 @@ class StreamingSpec extends SparkSpec {
       q2.processAllAvailable(); q2.stop()
       assert(buf.toList.drop(1) == List(ChunkRow(2L, 1L, "n e w")),
         s"recovered state failed to suppress the replayed chunk: $buf")
-    } finally prev match {
-      case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 
