@@ -54,7 +54,8 @@ object Graft {
     * cluster). Kept separate so Verify/Bench/tests share one definition.
     */
   def configure(b: SparkSession.Builder, shufflePartitions: Int): SparkSession.Builder =
-    b.config("spark.sql.shuffle.partitions", shufflePartitions.toString)
+    LocalFs.sparkConfs.foldLeft(b) { case (b, (k, v)) => b.config(k, v) }
+      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       // native kernels on the SQL surface from session build time
       // (GraftExtensions); sessions built elsewhere can call
       // GraftSqlBridge.registerFunctions instead

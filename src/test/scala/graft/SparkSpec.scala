@@ -65,6 +65,14 @@ trait SparkSpec extends AnyFunSuite {
     }
   }
 
+  /** Run `body` on a new temp directory named after `prefix`, then delete
+    * the directory and everything under it, whether `body` passed or not.
+    */
+  def withTempDir[T](prefix: String)(body: java.nio.file.Path => T): T = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    try body(dir) finally graft.core.Graft.removeRecursively(dir)
+  }
+
   /** All WindowExec nodes under the plan of `df`, through AQE. */
   def windowNodes(df: org.apache.spark.sql.DataFrame):
       Seq[org.apache.spark.sql.execution.window.WindowExec] =

@@ -18,11 +18,6 @@ import org.apache.spark.sql.types.{LongType, TimestampType}
   */
 class TablesSpec extends SparkSpec {
 
-  private def withTempDir(body: Path => Unit): Unit = {
-    val d = Files.createTempDirectory("graft-tables")
-    try body(d) finally Graft.removeRecursively(d)
-  }
-
   /** Write one parquet file directly (no Spark job, no part directory). */
   private def writeParquet(file: Path, schema: String, rows: Seq[Seq[(String, Any)]]): Unit = {
     val mt = MessageTypeParser.parseMessageType(schema)
@@ -58,7 +53,7 @@ class TablesSpec extends SparkSpec {
   test("reading events changes no session conf, so a table read before and after it is inferred once") {
     // a new session starts from the built confs, whatever earlier specs read
     val s = spark.newSession()
-    withTempDir { d =>
+    withTempDir("graft-tables") { d =>
       // fresh paths, so the first read of each is a miss
       for (t <- Seq("region", "events"))
         Files.copy(Paths.get(s"$sfDir/$t.parquet"), d.resolve(s"$t.parquet"))
@@ -73,7 +68,7 @@ class TablesSpec extends SparkSpec {
   }
 
   test("a file rewritten at the same path is read with its new schema") {
-    withTempDir { d =>
+    withTempDir("graft-tables") { d =>
       val f = d.resolve("t.parquet")
       writeParquet(f, "message t { required int64 id; required binary a (STRING); }",
         Seq(Seq("id" -> 1L, "a" -> "x")))
@@ -94,7 +89,7 @@ class TablesSpec extends SparkSpec {
   }
 
   test("a directory table is inferred on every read, never cached") {
-    withTempDir { d =>
+    withTempDir("graft-tables") { d =>
       spark.range(3).toDF("r_regionkey").write.parquet(s"$d/region.parquet")
       for (_ <- 1 to 2)
         assert(jobsDuring { Tables(spark, d.toString).region; () } >= 1)
@@ -110,8 +105,8 @@ class TablesSpec extends SparkSpec {
         raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
       else raw
     }
-    withTempDir { micros =>
-      withTempDir { nanos =>
+    withTempDir("graft-tables") { micros =>
+      withTempDir("graft-tables") { nanos =>
         // fresh paths, so the first Tables read below is a miss
         Files.copy(Paths.get(s"$sfDir/events.parquet"), micros.resolve("events.parquet"))
         writeParquet(nanos.resolve("events.parquet"),

@@ -52,22 +52,24 @@ class ExamplesSpec extends SparkSpec {
   }
 
   test("topology runs from a streaming file source (beyond MemoryStream)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_filesrc").toString
-    // seed one file so the schema exists before the stream starts
-    Seq(msg("alpha beta", 0)).toDS().write.parquet(s"$dir/in")
-    val src = spark.readStream
-      .schema(Seq.empty[Message].toDS().schema)
-      .parquet(s"$dir/in").as[Message]
-    val tp = Examples.wordCountTopology(s"wcf-${System.nanoTime()}")
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    val q = tp.runWith(src) { (batch, _) =>
-      out ++= batch.collect().map(r => new String(r.getAs[Array[Byte]]("key"), UTF_8))
+    withTempDir("graft_filesrc") { tmp =>
+      val dir = tmp.toString
+      // seed one file so the schema exists before the stream starts
+      Seq(msg("alpha beta", 0)).toDS().write.parquet(s"$dir/in")
+      val src = spark.readStream
+        .schema(Seq.empty[Message].toDS().schema)
+        .parquet(s"$dir/in").as[Message]
+      val tp = Examples.wordCountTopology(s"wcf-${System.nanoTime()}")
+      val out = scala.collection.mutable.ArrayBuffer.empty[String]
+      val q = tp.runWith(src) { (batch, _) =>
+        out ++= batch.collect().map(r => new String(r.getAs[Array[Byte]]("key"), UTF_8))
+      }
+      q.processAllAvailable()
+      Seq(msg("beta gamma", 1)).toDS().write.mode("append").parquet(s"$dir/in")
+      q.processAllAvailable()
+      q.stop()
+      assert(out.toSet == Set("alpha", "beta", "gamma"))
+      assert(out.count(_ == "beta") == 2, "beta counted in both files")
     }
-    q.processAllAvailable()
-    Seq(msg("beta gamma", 1)).toDS().write.mode("append").parquet(s"$dir/in")
-    q.processAllAvailable()
-    q.stop()
-    assert(out.toSet == Set("alpha", "beta", "gamma"))
-    assert(out.count(_ == "beta") == 2, "beta counted in both files")
   }
 }

@@ -331,14 +331,16 @@ class VectorOpsSpec extends SparkSpec {
     // save/load: the layout self-describes the variant via nrm2h
     val before = idx.search(queries, "vec_id", "embedding", k = 10, nprobe = 4)
       .collect().toSet
-    val dir = java.nio.file.Files.createTempDirectory("graft_idx_sq8r").toString
-    idx.save(dir)
-    idx.close()
-    val loaded = IvfSq8Index.load(spark, dir, e, "vec_id", "embedding")
-    assert(loaded.residual, "loaded index must detect the residual layout")
-    assert(loaded.search(queries, "vec_id", "embedding", k = 10, nprobe = 4)
-      .collect().toSet == before)
-    loaded.close()
+    withTempDir("graft_idx_sq8r") { tmp =>
+      val dir = tmp.toString
+      idx.save(dir)
+      idx.close()
+      val loaded = IvfSq8Index.load(spark, dir, e, "vec_id", "embedding")
+      assert(loaded.residual, "loaded index must detect the residual layout")
+      assert(loaded.search(queries, "vec_id", "embedding", k = 10, nprobe = 4)
+        .collect().toSet == before)
+      loaded.close()
+    }
   }
 
   test("PQ index: complete codebook grid, valid codes, recall after re-rank") {
@@ -585,30 +587,34 @@ class VectorOpsSpec extends SparkSpec {
     val idx = VectorOps.IvfPqIndex.build(e, "vec_id", "embedding", c = 16, m = 8, k = 16)
     val before = idx.search(queries, "vec_id", "embedding", kTop = 10, nprobe = 4, rescore = 8)
       .collect().toSet
-    val dir = java.nio.file.Files.createTempDirectory("graft_idx").toString
-    idx.save(dir)
-    idx.close()
-    val loaded = VectorOps.IvfPqIndex.load(spark, dir, e, "vec_id", "embedding")
-    val after = loaded.search(queries, "vec_id", "embedding", kTop = 10, nprobe = 4, rescore = 8)
-      .collect().toSet
-    assert(after == before, "loaded index must return identical results")
-    // the persisted layout is cell-partitioned — the probe's cid filter
-    // is directory pruning, the on-storage shape search relies on
-    val cellDirs = new java.io.File(s"$dir/codes").listFiles()
-      .filter(_.getName.startsWith("cid=")).map(_.getName).toSet
-    assert(cellDirs.nonEmpty, "codes must be partitioned by cell")
-    loaded.close()
-    // SQ8: same round-trip contract
-    val sq8 = VectorOps.IvfSq8Index.build(e, "vec_id", "embedding", c = 16)
-    val sq8Before = sq8.search(queries, "vec_id", "embedding", k = 10, nprobe = 4)
-      .collect().toSet
-    val sq8Dir = java.nio.file.Files.createTempDirectory("graft_idx_sq8").toString
-    sq8.save(sq8Dir)
-    sq8.close()
-    val sq8Loaded = VectorOps.IvfSq8Index.load(spark, sq8Dir, e, "vec_id", "embedding")
-    assert(sq8Loaded.search(queries, "vec_id", "embedding", k = 10, nprobe = 4)
-      .collect().toSet == sq8Before)
-    sq8Loaded.close()
+    withTempDir("graft_idx") { tmp =>
+      val dir = tmp.toString
+      idx.save(dir)
+      idx.close()
+      val loaded = VectorOps.IvfPqIndex.load(spark, dir, e, "vec_id", "embedding")
+      val after = loaded.search(queries, "vec_id", "embedding", kTop = 10, nprobe = 4, rescore = 8)
+        .collect().toSet
+      assert(after == before, "loaded index must return identical results")
+      // the persisted layout is cell-partitioned — the probe's cid filter
+      // is directory pruning, the on-storage shape search relies on
+      val cellDirs = new java.io.File(s"$dir/codes").listFiles()
+        .filter(_.getName.startsWith("cid=")).map(_.getName).toSet
+      assert(cellDirs.nonEmpty, "codes must be partitioned by cell")
+      loaded.close()
+      // SQ8: same round-trip contract
+      val sq8 = VectorOps.IvfSq8Index.build(e, "vec_id", "embedding", c = 16)
+      val sq8Before = sq8.search(queries, "vec_id", "embedding", k = 10, nprobe = 4)
+        .collect().toSet
+      withTempDir("graft_idx_sq8") { tmp =>
+        val sq8Dir = tmp.toString
+        sq8.save(sq8Dir)
+        sq8.close()
+        val sq8Loaded = VectorOps.IvfSq8Index.load(spark, sq8Dir, e, "vec_id", "embedding")
+        assert(sq8Loaded.search(queries, "vec_id", "embedding", k = 10, nprobe = 4)
+          .collect().toSet == sq8Before)
+        sq8Loaded.close()
+      }
+    }
   }
 
   test("IvfIndex save/load: meta-validated round-trip; a tampered dir fails loudly at load") {
@@ -617,39 +623,41 @@ class VectorOpsSpec extends SparkSpec {
     val idx = VectorOps.IvfIndex.build(e.filter($"vec_id" < 200), "vec_id", "embedding", c = 8)
     val before = idx.search(queries, "vec_id", "embedding", k = 10, nprobe = 8)
       .collect().toSet
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_meta").toString
-    idx.save(dir)
-    val (savedDim, savedSize) = (idx.dim, idx.size)
-    idx.close()
-    val loaded = VectorOps.IvfIndex.load(spark, dir)
-    assert(loaded.dim == savedDim && loaded.size == savedSize)
-    assert(loaded.search(queries, "vec_id", "embedding", k = 10, nprobe = 8)
-      .collect().toSet == before, "loaded index must return identical results")
-    loaded.close()
-    // tampered meta (wrong row count) → named failure AT LOAD, not an
-    // obscure misbehavior later at probe/append time
-    val resident0 = spark.sparkContext.getPersistentRDDs.keySet
-    Seq((savedDim, savedSize - 1)).toDF("dim", "size")
-      .write.mode("overwrite").parquet(s"$dir/meta")
-    val eSize = intercept[IllegalArgumentException](VectorOps.IvfIndex.load(spark, dir))
-    assert(eSize.getMessage.contains("meta recorded"), eSize.getMessage)
-    // tampered meta (wrong dim) → the min/max size(v) guard catches it
-    Seq((savedDim + 1, savedSize)).toDF("dim", "size")
-      .write.mode("overwrite").parquet(s"$dir/meta")
-    val eDim = intercept[IllegalArgumentException](VectorOps.IvfIndex.load(spark, dir))
-    assert(eDim.getMessage.contains("-dim"), eDim.getMessage)
-    // neither failed load may leave its half-loaded frames pinned
-    assert(spark.sparkContext.getPersistentRDDs.keySet.subsetOf(resident0),
-      "failed load must release its caches")
-    // a dir saved BEFORE meta existed (round-11 layout) still loads:
-    // dims validated internally, count cross-check skipped
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles.foreach(rm); f.delete()
+    withTempDir("graft_ivf_meta") { tmp =>
+      val dir = tmp.toString
+      idx.save(dir)
+      val (savedDim, savedSize) = (idx.dim, idx.size)
+      idx.close()
+      val loaded = VectorOps.IvfIndex.load(spark, dir)
+      assert(loaded.dim == savedDim && loaded.size == savedSize)
+      assert(loaded.search(queries, "vec_id", "embedding", k = 10, nprobe = 8)
+        .collect().toSet == before, "loaded index must return identical results")
+      loaded.close()
+      // tampered meta (wrong row count) → named failure AT LOAD, not an
+      // obscure misbehavior later at probe/append time
+      val resident0 = spark.sparkContext.getPersistentRDDs.keySet
+      Seq((savedDim, savedSize - 1)).toDF("dim", "size")
+        .write.mode("overwrite").parquet(s"$dir/meta")
+      val eSize = intercept[IllegalArgumentException](VectorOps.IvfIndex.load(spark, dir))
+      assert(eSize.getMessage.contains("meta recorded"), eSize.getMessage)
+      // tampered meta (wrong dim) → the min/max size(v) guard catches it
+      Seq((savedDim + 1, savedSize)).toDF("dim", "size")
+        .write.mode("overwrite").parquet(s"$dir/meta")
+      val eDim = intercept[IllegalArgumentException](VectorOps.IvfIndex.load(spark, dir))
+      assert(eDim.getMessage.contains("-dim"), eDim.getMessage)
+      // neither failed load may leave its half-loaded frames pinned
+      assert(spark.sparkContext.getPersistentRDDs.keySet.subsetOf(resident0),
+        "failed load must release its caches")
+      // a dir saved BEFORE meta existed (round-11 layout) still loads:
+      // dims validated internally, count cross-check skipped
+      def rm(f: java.io.File): Unit = {
+        if (f.isDirectory) f.listFiles.foreach(rm); f.delete()
+      }
+      rm(new java.io.File(s"$dir/meta"))
+      val legacy = VectorOps.IvfIndex.load(spark, dir)
+      assert(legacy.dim == savedDim && legacy.size == savedSize)
+      legacy.close()
     }
-    rm(new java.io.File(s"$dir/meta"))
-    val legacy = VectorOps.IvfIndex.load(spark, dir)
-    assert(legacy.dim == savedDim && legacy.size == savedSize)
-    legacy.close()
   }
 
   test("MipsIndex: full-probe == exact dot top-k; save/load round-trip; plain dir refused") {
@@ -689,40 +697,44 @@ class VectorOpsSpec extends SparkSpec {
     }).flatten.toSet
     assert(gotF == bruteF, "filtered full-probe MIPS must equal the exact filtered dot top-k")
     // save/load: identical results; the marker gates the load path
-    val dir = java.nio.file.Files.createTempDirectory("graft_mips").toString
-    mips.save(dir)
-    val savedM2 = mips.m2
-    mips.close()
-    val loaded = VectorOps.MipsIndex.load(spark, dir)
-    assert(loaded.m2 == savedM2)
-    assert(loaded.searchDot(queries, "vec_id", "embedding", k = 5, nprobe = 8)
-      .select("qid", "id").as[(Long, Long)].collect().toSet == got)
-    loaded.close()
-    // the REVERSE direction: IvfIndex.load must refuse a MIPS dir — its
-    // vectors are (d+1)-dim constant-norm augmented, and silently
-    // serving cosine over them is the cross-wired-metric bug the marker
-    // exists to catch in BOTH directions
-    val exRev = intercept[IllegalArgumentException](
-      VectorOps.IvfIndex.load(spark, dir))
-    assert(exRev.getMessage.contains("MIPS marker"), exRev.getMessage)
-    // dir REUSE: a plain save into a former MIPS dir must clear the
-    // stale marker — otherwise IvfIndex.load refuses a valid plain
-    // index and MipsIndex.load silently serves d-dim vectors against
-    // (d+1)-augmented queries with a stale m2
-    val plainReuse = VectorOps.IvfIndex.build(e, "vec_id", "embedding", c = 8)
-    plainReuse.save(dir)
-    plainReuse.close()
-    VectorOps.IvfIndex.load(spark, dir).close() // accepted again
-    intercept[IllegalArgumentException](VectorOps.MipsIndex.load(spark, dir))
-    // a PLAIN cosine index dir (no mips_meta) must be refused by name
-    val plain = VectorOps.IvfIndex.build(e, "vec_id", "embedding", c = 8)
-    val plainDir = java.nio.file.Files.createTempDirectory("graft_plain").toString
-    plain.save(plainDir)
-    plain.close()
-    val ex = intercept[IllegalArgumentException](
-      VectorOps.MipsIndex.load(spark, plainDir))
-    assert(ex.getMessage.contains("no MIPS marker"), ex.getMessage)
-    spark.catalog.clearCache()
+    withTempDir("graft_mips") { tmp =>
+      val dir = tmp.toString
+      mips.save(dir)
+      val savedM2 = mips.m2
+      mips.close()
+      val loaded = VectorOps.MipsIndex.load(spark, dir)
+      assert(loaded.m2 == savedM2)
+      assert(loaded.searchDot(queries, "vec_id", "embedding", k = 5, nprobe = 8)
+        .select("qid", "id").as[(Long, Long)].collect().toSet == got)
+      loaded.close()
+      // the REVERSE direction: IvfIndex.load must refuse a MIPS dir — its
+      // vectors are (d+1)-dim constant-norm augmented, and silently
+      // serving cosine over them is the cross-wired-metric bug the marker
+      // exists to catch in BOTH directions
+      val exRev = intercept[IllegalArgumentException](
+        VectorOps.IvfIndex.load(spark, dir))
+      assert(exRev.getMessage.contains("MIPS marker"), exRev.getMessage)
+      // dir REUSE: a plain save into a former MIPS dir must clear the
+      // stale marker — otherwise IvfIndex.load refuses a valid plain
+      // index and MipsIndex.load silently serves d-dim vectors against
+      // (d+1)-augmented queries with a stale m2
+      val plainReuse = VectorOps.IvfIndex.build(e, "vec_id", "embedding", c = 8)
+      plainReuse.save(dir)
+      plainReuse.close()
+      VectorOps.IvfIndex.load(spark, dir).close() // accepted again
+      intercept[IllegalArgumentException](VectorOps.MipsIndex.load(spark, dir))
+      // a PLAIN cosine index dir (no mips_meta) must be refused by name
+      val plain = VectorOps.IvfIndex.build(e, "vec_id", "embedding", c = 8)
+      withTempDir("graft_plain") { tmp =>
+        val plainDir = tmp.toString
+        plain.save(plainDir)
+        plain.close()
+        val ex = intercept[IllegalArgumentException](
+          VectorOps.MipsIndex.load(spark, plainDir))
+        assert(ex.getMessage.contains("no MIPS marker"), ex.getMessage)
+        spark.catalog.clearCache()
+      }
+    }
   }
 
   test("filtered MIPS: recall vs the exact filtered dot top-k is monotone in nprobe; no leak") {
@@ -792,35 +804,37 @@ class VectorOpsSpec extends SparkSpec {
       f"${part.intersect(brute).size.toDouble / brute.size}%.2f")
     // save/load round-trip: marker carries M² so the raw re-rank table
     // re-augments consistently; results identical
-    val dir = java.nio.file.Files.createTempDirectory("graft_mips_sq8").toString
-    idx.save(dir)
-    val savedM2 = idx.m2
-    idx.close()
-    val loaded = VectorOps.MipsSq8Index.load(spark, dir, e, "vec_id", "embedding")
-    assert(loaded.m2 == savedM2)
-    assert(loaded.searchDot(queries, "vec_id", "embedding", k = 5,
-        nprobe = 8, rescore = full)
-      .select("qid", "id").as[(Long, Long)].collect().toSet == got)
-    loaded.close()
-    // a PLAIN SQ8 dir (no marker) must be refused by name — and a plain
-    // re-save into this former MIPS dir clears the stale marker
-    val plain = VectorOps.IvfSq8Index.build(e, "vec_id", "embedding", c = 8)
-    plain.save(dir)
-    plain.close()
-    val ex = intercept[IllegalArgumentException](
-      VectorOps.MipsSq8Index.load(spark, dir, e, "vec_id", "embedding"))
-    assert(ex.getMessage.contains("no MIPS marker"), ex.getMessage)
-    // a failed SQ8 load (wrong-dim raw table) must not leave its
-    // freshly-filled code/centroid caches pinned in the block manager
-    val resident0 = spark.sparkContext.getPersistentRDDs.keySet
-    val wrongDim = e.select($"vec_id",
-      org.apache.spark.sql.functions.slice($"embedding", 1, 4).as("embedding"))
-    val exDim = intercept[IllegalArgumentException](
-      VectorOps.IvfSq8Index.load(spark, dir, wrongDim, "vec_id", "embedding"))
-    assert(exDim.getMessage.contains("-dim"), exDim.getMessage)
-    assert(spark.sparkContext.getPersistentRDDs.keySet.subsetOf(resident0),
-      "failed SQ8 load must release its caches")
-    spark.catalog.clearCache()
+    withTempDir("graft_mips_sq8") { tmp =>
+      val dir = tmp.toString
+      idx.save(dir)
+      val savedM2 = idx.m2
+      idx.close()
+      val loaded = VectorOps.MipsSq8Index.load(spark, dir, e, "vec_id", "embedding")
+      assert(loaded.m2 == savedM2)
+      assert(loaded.searchDot(queries, "vec_id", "embedding", k = 5,
+          nprobe = 8, rescore = full)
+        .select("qid", "id").as[(Long, Long)].collect().toSet == got)
+      loaded.close()
+      // a PLAIN SQ8 dir (no marker) must be refused by name — and a plain
+      // re-save into this former MIPS dir clears the stale marker
+      val plain = VectorOps.IvfSq8Index.build(e, "vec_id", "embedding", c = 8)
+      plain.save(dir)
+      plain.close()
+      val ex = intercept[IllegalArgumentException](
+        VectorOps.MipsSq8Index.load(spark, dir, e, "vec_id", "embedding"))
+      assert(ex.getMessage.contains("no MIPS marker"), ex.getMessage)
+      // a failed SQ8 load (wrong-dim raw table) must not leave its
+      // freshly-filled code/centroid caches pinned in the block manager
+      val resident0 = spark.sparkContext.getPersistentRDDs.keySet
+      val wrongDim = e.select($"vec_id",
+        org.apache.spark.sql.functions.slice($"embedding", 1, 4).as("embedding"))
+      val exDim = intercept[IllegalArgumentException](
+        VectorOps.IvfSq8Index.load(spark, dir, wrongDim, "vec_id", "embedding"))
+      assert(exDim.getMessage.contains("-dim"), exDim.getMessage)
+      assert(spark.sparkContext.getPersistentRDDs.keySet.subsetOf(resident0),
+        "failed SQ8 load must release its caches")
+      spark.catalog.clearCache()
+    }
   }
 
   test("MipsIndex.build costs exactly one extra bounded scalar job over IvfIndex.build") {

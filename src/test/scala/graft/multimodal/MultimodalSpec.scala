@@ -216,29 +216,31 @@ class MultimodalSpec extends SparkSpec {
     // content), wrapped as media rows, decoded by the real codec path —
     // proving the source half of the multimodal pipeline, not just the
     // in-memory column plumbing
-    val dir = java.nio.file.Files.createTempDirectory("graft_media").toFile
-    val png1 = encodeGray(4, 2, (x, y) => (y * 4 + x) * 8, "png")
-    val png2 = encodeGray(3, 3, (x, y) => x * 30, "png")
-    java.nio.file.Files.write(new java.io.File(dir, "a.png").toPath, png1)
-    java.nio.file.Files.write(new java.io.File(dir, "b.png").toPath, png2)
-    java.nio.file.Files.write(new java.io.File(dir, "junk.png").toPath,
-      Array.tabulate[Byte](16)(i => (i * 3).toByte)) // corrupt → dropped
-    val files = spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.png").load(dir.getAbsolutePath)
-      .select(
-        // deterministic id from the file name (paths carry the temp dir)
-        xxhash64(element_at(split(input_file_name(), "/"), -1)).as("id"),
-        element_at(split(input_file_name(), "/"), -1).as("name"),
-        col("content"))
-    val media = files
-      .select(col("id"), lit("image").as("kind"),
-        col("content").as("payload"),
-        map(lit("file"), col("name")).as("meta"))
-      .as[MediaRow]
-    val out = Multimodal.decodeImage(media).collect()
-    assert(out.length == 2, s"corrupt file must drop: ${out.toSeq}")
-    assert(out.map(d => (d.width, d.height)).toSet == Set((4, 2), (3, 3)),
-      s"true dimensions from disk bytes: ${out.toSeq}")
+    withTempDir("graft_media") { tmp =>
+      val dir = tmp.toFile
+      val png1 = encodeGray(4, 2, (x, y) => (y * 4 + x) * 8, "png")
+      val png2 = encodeGray(3, 3, (x, y) => x * 30, "png")
+      java.nio.file.Files.write(new java.io.File(dir, "a.png").toPath, png1)
+      java.nio.file.Files.write(new java.io.File(dir, "b.png").toPath, png2)
+      java.nio.file.Files.write(new java.io.File(dir, "junk.png").toPath,
+        Array.tabulate[Byte](16)(i => (i * 3).toByte)) // corrupt → dropped
+      val files = spark.read.format("binaryFile")
+        .option("pathGlobFilter", "*.png").load(dir.getAbsolutePath)
+        .select(
+          // deterministic id from the file name (paths carry the temp dir)
+          xxhash64(element_at(split(input_file_name(), "/"), -1)).as("id"),
+          element_at(split(input_file_name(), "/"), -1).as("name"),
+          col("content"))
+      val media = files
+        .select(col("id"), lit("image").as("kind"),
+          col("content").as("payload"),
+          map(lit("file"), col("name")).as("meta"))
+        .as[MediaRow]
+      val out = Multimodal.decodeImage(media).collect()
+      assert(out.length == 2, s"corrupt file must drop: ${out.toSeq}")
+      assert(out.map(d => (d.width, d.height)).toSet == Set((4, 2), (3, 3)),
+        s"true dimensions from disk bytes: ${out.toSeq}")
+    }
   }
 
   test("sampleFrames chunks the payload at stride") {

@@ -8,22 +8,24 @@ class CorpusOpsSpec extends SparkSpec {
 
   test("writeShards: deterministic shard dirs, lossless roundtrip, stable re-run") {
     val docs = graft.core.Tables(spark, sfDir).documents
-    val dir = java.nio.file.Files.createTempDirectory("graft_shards").toString
-    graft.ops.CorpusOps.writeShards(docs, "doc_id", nShards = 4, dir)
-    val dirs = new java.io.File(dir).listFiles()
-      .filter(_.getName.startsWith("shard=")).map(_.getName).sorted.toSeq
-    assert(dirs == Seq("shard=0", "shard=1", "shard=2", "shard=3"))
-    val back = spark.read.parquet(dir)
-    assert(back.count() == docs.count())
-    assert(back.select("doc_id").except(docs.select("doc_id")).count() == 0)
-    // membership is a pure function of the id: a re-written export is
-    // byte-for-byte the same layout (retry safety)
-    val before = back.select($"doc_id", $"shard".cast("long"))
-      .as[(Long, Long)].collect().toMap
-    graft.ops.CorpusOps.writeShards(docs, "doc_id", nShards = 4, dir)
-    val after = spark.read.parquet(dir).select($"doc_id", $"shard".cast("long"))
-      .as[(Long, Long)].collect().toMap
-    assert(before == after)
+    withTempDir("graft_shards") { tmp =>
+      val dir = tmp.toString
+      graft.ops.CorpusOps.writeShards(docs, "doc_id", nShards = 4, dir)
+      val dirs = new java.io.File(dir).listFiles()
+        .filter(_.getName.startsWith("shard=")).map(_.getName).sorted.toSeq
+      assert(dirs == Seq("shard=0", "shard=1", "shard=2", "shard=3"))
+      val back = spark.read.parquet(dir)
+      assert(back.count() == docs.count())
+      assert(back.select("doc_id").except(docs.select("doc_id")).count() == 0)
+      // membership is a pure function of the id: a re-written export is
+      // byte-for-byte the same layout (retry safety)
+      val before = back.select($"doc_id", $"shard".cast("long"))
+        .as[(Long, Long)].collect().toMap
+      graft.ops.CorpusOps.writeShards(docs, "doc_id", nShards = 4, dir)
+      val after = spark.read.parquet(dir).select($"doc_id", $"shard".cast("long"))
+        .as[(Long, Long)].collect().toMap
+      assert(before == after)
+    }
   }
 
   test("repetitionStats flags repeated bigrams and the top-gram share") {

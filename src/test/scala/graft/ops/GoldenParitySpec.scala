@@ -90,34 +90,36 @@ class GoldenParitySpec extends SparkSpec {
 
   test("two-stage entity-keyed join (resolve → assemble) reproduces the golden output across queries") {
     import graft.streaming.StatefulOps
-    val work = java.nio.file.Files.createTempDirectory("graft_twostage").toString
-    // stage 1: character-keyed resolution, chained through an
-    // exactly-once parquet file sink (the kasper chained-processor shape)
-    val in = MemoryStream[JoinInput]
-    val q1 = StatefulOps.resolveCharacters(in.toDS())
-      .writeStream.format("parquet")
-      .option("path", s"$work/stage").option("checkpointLocation", s"$work/ckpt1")
-      .outputMode(OutputMode.Append()).start()
-    // stage 2: fiction-keyed assembly reading the intermediate
-    val stage = spark.readStream
-      .schema(Seq.empty[StatefulOps.StageRecord].toDS().schema)
-      .parquet(s"$work/stage").as[StatefulOps.StageRecord]
-    val q2 = StatefulOps.assembleFictions(stage)
-      .writeStream.format("memory").queryName("golden_two_stage")
-      .outputMode(OutputMode.Update()).start()
+    withTempDir("graft_twostage") { tmp =>
+      val work = tmp.toString
+      // stage 1: character-keyed resolution, chained through an
+      // exactly-once parquet file sink (the kasper chained-processor shape)
+      val in = MemoryStream[JoinInput]
+      val q1 = StatefulOps.resolveCharacters(in.toDS())
+        .writeStream.format("parquet")
+        .option("path", s"$work/stage").option("checkpointLocation", s"$work/ckpt1")
+        .outputMode(OutputMode.Append()).start()
+      // stage 2: fiction-keyed assembly reading the intermediate
+      val stage = spark.readStream
+        .schema(Seq.empty[StatefulOps.StageRecord].toDS().schema)
+        .parquet(s"$work/stage").as[StatefulOps.StageRecord]
+      val q2 = StatefulOps.assembleFictions(stage)
+        .writeStream.format("memory").queryName("golden_two_stage")
+        .outputMode(OutputMode.Update()).start()
 
-    // adversarial order: fictions first — everything resolves via state
-    in.addData(seedFictions.map(f => JoinInput(0, None, Some(f))))
-    q1.processAllAvailable(); q2.processAllAvailable()
-    assert(spark.table("golden_two_stage").count() == 0,
-      "no characters yet — assembly suppressed")
-    in.addData(seedCharacters.map(c => JoinInput(0, Some(c), None)))
-    q1.processAllAvailable(); q2.processAllAvailable()
-    val rows = spark.table("golden_two_stage").as[FictionAndCharacters].collect()
-    q1.stop(); q2.stop()
-    val finalByKey = rows.zipWithIndex.groupBy(_._1.id)
-      .map { case (k, vs) => k -> vs.maxBy(_._2)._1 }
-    assert(finalByKey == golden)
+      // adversarial order: fictions first — everything resolves via state
+      in.addData(seedFictions.map(f => JoinInput(0, None, Some(f))))
+      q1.processAllAvailable(); q2.processAllAvailable()
+      assert(spark.table("golden_two_stage").count() == 0,
+        "no characters yet — assembly suppressed")
+      in.addData(seedCharacters.map(c => JoinInput(0, Some(c), None)))
+      q1.processAllAvailable(); q2.processAllAvailable()
+      val rows = spark.table("golden_two_stage").as[FictionAndCharacters].collect()
+      q1.stop(); q2.stop()
+      val finalByKey = rows.zipWithIndex.groupBy(_._1.id)
+        .map { case (k, vs) => k -> vs.maxBy(_._2)._1 }
+      assert(finalByKey == golden)
+    }
   }
 
   test("StatefulOps.fictionsJoin converges to the golden output when fictions arrive first") {

@@ -114,61 +114,67 @@ class ScaleOpsSpec extends SparkSpec {
 
   test("writeSorted: files cover disjoint key ranges, file size capped") {
     import org.apache.spark.sql.functions.{col, input_file_name, min, max, count, lit}
-    val dir = java.nio.file.Files.createTempDirectory("graft_sorted").toString
-    val df = spark.range(0, 10000).select((col("id") * 7919 % 10000).as("k"))
-    ScaleOps.writeSorted(df, dir, "k", partitions = 4, maxRecordsPerFile = 2000)
-    val files = spark.read.parquet(dir)
-      .groupBy(input_file_name().as("f"))
-      .agg(min(col("k")).as("mn"), max(col("k")).as("mx"), count(lit(1)).as("n"))
-      .collect().map(r => (r.getLong(1), r.getLong(2), r.getLong(3)))
-      .sortBy(_._1)
-    assert(files.forall(_._3 <= 2000), s"file over cap: ${files.toSeq}")
-    // disjoint, ordered ranges: each file's min exceeds the previous max
-    files.sliding(2).foreach {
-      case Array((_, mxA, _), (mnB, _, _)) =>
-        assert(mnB > mxA, s"overlapping file ranges: ${files.toSeq}")
-      case _ => ()
+    withTempDir("graft_sorted") { tmp =>
+      val dir = tmp.toString
+      val df = spark.range(0, 10000).select((col("id") * 7919 % 10000).as("k"))
+      ScaleOps.writeSorted(df, dir, "k", partitions = 4, maxRecordsPerFile = 2000)
+      val files = spark.read.parquet(dir)
+        .groupBy(input_file_name().as("f"))
+        .agg(min(col("k")).as("mn"), max(col("k")).as("mx"), count(lit(1)).as("n"))
+        .collect().map(r => (r.getLong(1), r.getLong(2), r.getLong(3)))
+        .sortBy(_._1)
+      assert(files.forall(_._3 <= 2000), s"file over cap: ${files.toSeq}")
+      // disjoint, ordered ranges: each file's min exceeds the previous max
+      files.sliding(2).foreach {
+        case Array((_, mxA, _), (mnB, _, _)) =>
+          assert(mnB > mxA, s"overlapping file ranges: ${files.toSeq}")
+        case _ => ()
+      }
+      // nothing lost in the rewrite
+      assert(spark.read.parquet(dir).count() == 10000)
     }
-    // nothing lost in the rewrite
-    assert(spark.read.parquet(dir).count() == 10000)
   }
 
   test("writeSorted to ORC: round-trip exact, ranges disjoint, filters push to the ORC scan") {
     import org.apache.spark.sql.functions.{col, input_file_name, min, max}
-    val dir = java.nio.file.Files.createTempDirectory("graft_sorted_orc").toString
-    val df = spark.range(0, 5000).select((col("id") * 7919 % 5000).as("k"))
-    ScaleOps.writeSorted(df, dir, "k", partitions = 4,
-      maxRecordsPerFile = 2000, format = "orc")
-    val back = spark.read.orc(dir)
-    assert(back.as[Long].collect().sorted.toSeq == (0L until 5000L).toSeq)
-    val ranges = back.groupBy(input_file_name().as("f"))
-      .agg(min(col("k")).as("mn"), max(col("k")).as("mx"))
-      .collect().map(r => (r.getLong(1), r.getLong(2))).sortBy(_._1)
-    ranges.sliding(2).foreach {
-      case Array((_, mxA), (mnB, _)) =>
-        assert(mnB > mxA, s"overlapping ORC file ranges: ${ranges.toSeq}")
-      case _ => ()
+    withTempDir("graft_sorted_orc") { tmp =>
+      val dir = tmp.toString
+      val df = spark.range(0, 5000).select((col("id") * 7919 % 5000).as("k"))
+      ScaleOps.writeSorted(df, dir, "k", partitions = 4,
+        maxRecordsPerFile = 2000, format = "orc")
+      val back = spark.read.orc(dir)
+      assert(back.as[Long].collect().sorted.toSeq == (0L until 5000L).toSeq)
+      val ranges = back.groupBy(input_file_name().as("f"))
+        .agg(min(col("k")).as("mn"), max(col("k")).as("mx"))
+        .collect().map(r => (r.getLong(1), r.getLong(2))).sortBy(_._1)
+      ranges.sliding(2).foreach {
+        case Array((_, mxA), (mnB, _)) =>
+          assert(mnB > mxA, s"overlapping ORC file ranges: ${ranges.toSeq}")
+        case _ => ()
+      }
+      // the point of the sorted layout: a key predicate reaches the scan
+      val plan = back.filter(col("k") < 100).queryExecution.executedPlan.toString
+      assert(plan.contains("PushedFilters: [IsNotNull(k), LessThan(k,100)]"),
+        s"ORC scan must carry the pushed key filter:\n$plan")
+      // unsupported formats are rejected before any write happens
+      intercept[IllegalArgumentException](
+        ScaleOps.writeSorted(df, dir, "k", 1, 1, format = "json"))
     }
-    // the point of the sorted layout: a key predicate reaches the scan
-    val plan = back.filter(col("k") < 100).queryExecution.executedPlan.toString
-    assert(plan.contains("PushedFilters: [IsNotNull(k), LessThan(k,100)]"),
-      s"ORC scan must carry the pushed key filter:\n$plan")
-    // unsupported formats are rejected before any write happens
-    intercept[IllegalArgumentException](
-      ScaleOps.writeSorted(df, dir, "k", 1, 1, format = "json"))
   }
 
   test("writeCompacted: ceil(n/target) evenly-sized files, content preserved") {
     import org.apache.spark.sql.functions.col
-    val dir = java.nio.file.Files.createTempDirectory("graft_compact").toString
-    // start deliberately fragmented: 64 partitions of ~16 rows
-    val df = spark.range(0, 1000).repartition(64).select(col("id"))
-    ScaleOps.writeCompacted(df, dir, targetRows = 300)
-    val parts = new java.io.File(dir).listFiles()
-      .count(f => f.getName.endsWith(".parquet"))
-    assert(parts == 4, s"expected ceil(1000/300)=4 files, got $parts")
-    assert(spark.read.parquet(dir).as[Long].collect().sorted.toSeq ==
-      (0L until 1000L))
+    withTempDir("graft_compact") { tmp =>
+      val dir = tmp.toString
+      // start deliberately fragmented: 64 partitions of ~16 rows
+      val df = spark.range(0, 1000).repartition(64).select(col("id"))
+      ScaleOps.writeCompacted(df, dir, targetRows = 300)
+      val parts = new java.io.File(dir).listFiles()
+        .count(f => f.getName.endsWith(".parquet"))
+      assert(parts == 4, s"expected ceil(1000/300)=4 files, got $parts")
+      assert(spark.read.parquet(dir).as[Long].collect().sorted.toSeq ==
+        (0L until 1000L))
+    }
   }
 
   test("saltedJoin result multiset equals the plain join at any salt") {

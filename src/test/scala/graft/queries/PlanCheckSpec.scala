@@ -9,10 +9,14 @@ import graft.SparkSpec
   */
 class PlanCheckSpec extends SparkSpec {
 
-  private lazy val plans: Map[String, String] =
-    Queries.all.map { case (name, fn) =>
+  // q02_sink writes its output while it is built: under a temp sink dir
+  // that is removed once every plan is rendered
+  private lazy val plans: Map[String, String] = withTempDir("graft_sink") { sink =>
+    spark.conf.set("spark.graft.sink.dir", sink.toString)
+    try Queries.all.map { case (name, fn) =>
       name -> fn(spark, sfDir).queryExecution.executedPlan.toString
-    }
+    } finally spark.conf.unset("spark.graft.sink.dir")
+  }
 
   test("no shuffled CartesianProduct in any query plan") {
     // deliberate all-pairs shapes (q34/q35/q41 single-query-vector or

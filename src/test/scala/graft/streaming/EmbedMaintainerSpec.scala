@@ -102,38 +102,40 @@ class EmbedMaintainerSpec extends SparkSpec {
     cm.ingest(0, walks)
     em.rebuildFrom(cm, 0, spark)
     val before = em.embeddings.as[(Long, Long, Long)].collect().toSet
-    val dir = java.nio.file.Files.createTempDirectory("graft_embm").toString
-    em.save(dir)
-    em.close()
+    withTempDir("graft_embm") { tmp =>
+      val dir = tmp.toString
+      em.save(dir)
+      em.close()
 
-    val m2 = EmbedMaintainer.load(spark, dir)
-    val after = m2.embeddings.as[(Long, Long, Long)].collect().toSet
-    assert(after == before, "loaded embeddings must equal the saved table")
-    val tele = m2.telemetry(spark)
-      .as[(Long, String, Long, Long, Long)].collect().toSeq
-    assert(tele.map(_._2) == Seq("built", "loaded"), s"got $tele")
-    assert(tele.last._3 == before.map(_._1).size.toLong &&
-      tele.last._4 == before.toSeq.map(_._3).sum,
-      "loaded gauges must match the saved table exactly")
+      val m2 = EmbedMaintainer.load(spark, dir)
+      val after = m2.embeddings.as[(Long, Long, Long)].collect().toSet
+      assert(after == before, "loaded embeddings must equal the saved table")
+      val tele = m2.telemetry(spark)
+        .as[(Long, String, Long, Long, Long)].collect().toSeq
+      assert(tele.map(_._2) == Seq("built", "loaded"), s"got $tele")
+      assert(tele.last._3 == before.map(_._1).size.toLong &&
+        tele.last._4 == before.toSeq.map(_._3).sum,
+        "loaded gauges must match the saved table exactly")
 
-    // the watermark survives: the pre-crash trigger re-delivers and skips
-    m2.rebuildFrom(cm, 0, spark)
-    assert(m2.telemetry(spark).as[(Long, String, Long, Long, Long)]
-      .collect().last._2 == "replay_skipped")
-    // the loaded index serves without retraining (full probe == exact)
-    val vecs = GraphOps.embedVectors(m2.embeddings).cache()
-    val brute = VectorOps.annBruteForce(
-        vecs, "id", "embedding", vecs, "id", "embedding", k = 2)
-      .select("qid", "id").as[(Long, Long)].collect().toSet
-    val served = m2.search(vecs, "id", "embedding", k = 2, nprobe = 2)
-      .select("qid", "id").as[(Long, Long)].collect().toSet
-    assert(served == brute)
+      // the watermark survives: the pre-crash trigger re-delivers and skips
+      m2.rebuildFrom(cm, 0, spark)
+      assert(m2.telemetry(spark).as[(Long, String, Long, Long, Long)]
+        .collect().last._2 == "replay_skipped")
+      // the loaded index serves without retraining (full probe == exact)
+      val vecs = GraphOps.embedVectors(m2.embeddings).cache()
+      val brute = VectorOps.annBruteForce(
+          vecs, "id", "embedding", vecs, "id", "embedding", k = 2)
+        .select("qid", "id").as[(Long, Long)].collect().toSet
+      val served = m2.search(vecs, "id", "embedding", k = 2, nprobe = 2)
+        .select("qid", "id").as[(Long, Long)].collect().toSet
+      assert(served == brute)
 
-    m2.close(); cm.close()
-    vecs.unpersist(blocking = false)
-    walks.unpersist(blocking = false)
-    graft.ops.ScaleOps.release()
-    spark.catalog.clearCache()
+      m2.close(); cm.close()
+      vecs.unpersist(blocking = false)
+      walks.unpersist(blocking = false)
+      graft.ops.ScaleOps.release()
+      spark.catalog.clearCache()
+    }
   }
 
   test("EmbedMaintainer withMips: dot generation maintained, exact gauges, marker-gated restore") {
@@ -176,36 +178,38 @@ class EmbedMaintainerSpec extends SparkSpec {
 
     // save/load restores the MIPS generation (marker-validated) and the
     // lifecycle log notes it
-    val dir = java.nio.file.Files.createTempDirectory("graft_embm_mips").toString
-    em.save(dir)
-    em.close()
-    val m2 = EmbedMaintainer.load(spark, dir)
-    assert(m2.searchDot(vecs, "id", "embedding", k = 2, nprobe = 2)
-      .select("qid", "id").as[(Long, Long)].collect().toSet == brute)
-    assert(m2.mipsTelemetry(spark)
-      .as[(Long, String, Long, Long, Long)].collect().last ==
-      ((1L, "loaded", nNodes, msq, nNodes)))
-    m2.close()
+    withTempDir("graft_embm_mips") { tmp =>
+      val dir = tmp.toString
+      em.save(dir)
+      em.close()
+      val m2 = EmbedMaintainer.load(spark, dir)
+      assert(m2.searchDot(vecs, "id", "embedding", k = 2, nprobe = 2)
+        .select("qid", "id").as[(Long, Long)].collect().toSet == brute)
+      assert(m2.mipsTelemetry(spark)
+        .as[(Long, String, Long, Long, Long)].collect().last ==
+        ((1L, "loaded", nNodes, msq, nNodes)))
+      m2.close()
 
-    // a dir whose mips_index was swapped for a PLAIN cosine layout must
-    // be REFUSED at load — the reloaded generation would otherwise
-    // silently serve the wrong metric (the marker-validation contract)
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles.foreach(rm); f.delete()
+      // a dir whose mips_index was swapped for a PLAIN cosine layout must
+      // be REFUSED at load — the reloaded generation would otherwise
+      // silently serve the wrong metric (the marker-validation contract)
+      def rm(f: java.io.File): Unit = {
+        if (f.isDirectory) f.listFiles.foreach(rm); f.delete()
+      }
+      rm(new java.io.File(s"$dir/mips_index"))
+      val plain = graft.functions.VectorOps.IvfIndex.build(
+        vecs, "id", "embedding", c = 2)
+      plain.save(s"$dir/mips_index")
+      plain.close()
+      val ex = intercept[IllegalArgumentException](EmbedMaintainer.load(spark, dir))
+      assert(ex.getMessage.contains("no MIPS marker"), ex.getMessage)
+
+      cm.close()
+      vecs.unpersist(blocking = false)
+      walks.unpersist(blocking = false)
+      graft.ops.ScaleOps.release()
+      spark.catalog.clearCache()
     }
-    rm(new java.io.File(s"$dir/mips_index"))
-    val plain = graft.functions.VectorOps.IvfIndex.build(
-      vecs, "id", "embedding", c = 2)
-    plain.save(s"$dir/mips_index")
-    plain.close()
-    val ex = intercept[IllegalArgumentException](EmbedMaintainer.load(spark, dir))
-    assert(ex.getMessage.contains("no MIPS marker"), ex.getMessage)
-
-    cm.close()
-    vecs.unpersist(blocking = false)
-    walks.unpersist(blocking = false)
-    graft.ops.ScaleOps.release()
-    spark.catalog.clearCache()
   }
 
   test("saveEmbeddings/loadEmbeddings: dim-partitioned roundtrip validates the meta checksum") {
@@ -213,19 +217,21 @@ class EmbedMaintainerSpec extends SparkSpec {
       GraphOps.skipGramPairs(walkCorpus, 2),
       "center", "context", "n", dims = 4, iters = 1)
     val rows = emb.as[(Long, Long, Long)].collect().toSet
-    val dir = java.nio.file.Files.createTempDirectory("graft_emb").toString
-    GraphOps.saveEmbeddings(emb, dir)
-    val back = GraphOps.loadEmbeddings(spark, dir)
-      .as[(Long, Long, Long)].collect().toSet
-    assert(back == rows)
-    // a tampered meta row fails AT LOAD with a named cause
-    Seq((4L, 999L, 0L)).toDF("dims", "n_nodes", "sum_val")
-      .write.mode("overwrite").parquet(s"$dir/meta")
-    val ex = intercept[IllegalArgumentException] {
-      GraphOps.loadEmbeddings(spark, dir)
+    withTempDir("graft_emb") { tmp =>
+      val dir = tmp.toString
+      GraphOps.saveEmbeddings(emb, dir)
+      val back = GraphOps.loadEmbeddings(spark, dir)
+        .as[(Long, Long, Long)].collect().toSet
+      assert(back == rows)
+      // a tampered meta row fails AT LOAD with a named cause
+      Seq((4L, 999L, 0L)).toDF("dims", "n_nodes", "sum_val")
+        .write.mode("overwrite").parquet(s"$dir/meta")
+      val ex = intercept[IllegalArgumentException] {
+        GraphOps.loadEmbeddings(spark, dir)
+      }
+      assert(ex.getMessage.contains("do not match meta"))
+      graft.ops.ScaleOps.release()
+      spark.catalog.clearCache()
     }
-    assert(ex.getMessage.contains("do not match meta"))
-    graft.ops.ScaleOps.release()
-    spark.catalog.clearCache()
   }
 }

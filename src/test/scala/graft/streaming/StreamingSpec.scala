@@ -34,30 +34,32 @@ class StreamingSpec extends SparkSpec {
     // produce-before-commit. foreachBatch sink: memory-format queries
     // refuse checkpoint recovery by design.
     import StatefulOps.KeyCount
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_restart").toString
-    val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, String, Long)]
-    val in = MemoryStream[String]
-    def start() = StatefulOps.runningCount(in.toDS())
-      .writeStream.outputMode(OutputMode.Update())
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (df: org.apache.spark.sql.Dataset[KeyCount], bid: Long) =>
-        val rows = df.collect()
-        buf.synchronized { rows.foreach(k => buf += ((bid, k.key, k.count))) }
-        ()
-      }.start()
-    val q1 = start()
-    in.addData("a", "a", "b"); q1.processAllAvailable(); q1.stop()
-    val afterFirst = buf.toList
-    assert(afterFirst.map { case (_, k, c) => (k, c) }.toSet ==
-      Set(("a", 2L), ("b", 1L)))
-    val q2 = start()
-    in.addData("a", "b", "b"); q2.processAllAvailable(); q2.stop()
-    val newRows = buf.toList.drop(afterFirst.size)
-    assert(newRows.map { case (_, k, c) => (k, c) }.toSet ==
-      Set(("a", 3L), ("b", 3L)),
-      s"restart lost state or re-emitted committed data: $newRows")
-    assert(newRows.map(_._1).forall(bid => bid > afterFirst.map(_._1).max),
-      "batch ids must continue past the committed epoch after restart")
+    withTempDir("graft_restart") { tmp =>
+      val ckpt = tmp.toString
+      val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, String, Long)]
+      val in = MemoryStream[String]
+      def start() = StatefulOps.runningCount(in.toDS())
+        .writeStream.outputMode(OutputMode.Update())
+        .option("checkpointLocation", ckpt)
+        .foreachBatch { (df: org.apache.spark.sql.Dataset[KeyCount], bid: Long) =>
+          val rows = df.collect()
+          buf.synchronized { rows.foreach(k => buf += ((bid, k.key, k.count))) }
+          ()
+        }.start()
+      val q1 = start()
+      in.addData("a", "a", "b"); q1.processAllAvailable(); q1.stop()
+      val afterFirst = buf.toList
+      assert(afterFirst.map { case (_, k, c) => (k, c) }.toSet ==
+        Set(("a", 2L), ("b", 1L)))
+      val q2 = start()
+      in.addData("a", "b", "b"); q2.processAllAvailable(); q2.stop()
+      val newRows = buf.toList.drop(afterFirst.size)
+      assert(newRows.map { case (_, k, c) => (k, c) }.toSet ==
+        Set(("a", 3L), ("b", 3L)),
+        s"restart lost state or re-emitted committed data: $newRows")
+      assert(newRows.map(_._1).forall(bid => bid > afterFirst.map(_._1).max),
+        "batch ids must continue past the committed epoch after restart")
+    }
   }
 
   test("latestByKey keeps the newest value per key across batches (KQ-11 streaming)") {
@@ -496,21 +498,23 @@ class StreamingSpec extends SparkSpec {
       VectorOps.IvfIndex.build(baseDf, "vec_id", "embedding", c = 4),
       "vec_id", "embedding", cvTrigger = 0.7, maxOverFactor = 1.5, trainCap = 0)
     run(m1, Seq(0L -> driftRows(0, 20)))
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_resume").toString
-    m1.index.save(dir)
-    m1.close()
-    val m2 = new IvfMaintainer(
-      VectorOps.IvfIndex.load(spark, dir),
-      "vec_id", "embedding", cvTrigger = 0.7, maxOverFactor = 1.5, trainCap = 0)
-    run(m2, Seq(1L -> driftRows(20, 40)))
-    val got = m2.index.assigned.select("cid", "id")
-      .as[(Long, Long)].collect().toSet
-    // the resumed run rebalanced on batch 1 exactly like the
-    // uninterrupted one (same trigger arithmetic over the same state)
-    assert(m2.occupancyLog(spark).filter($"action" === "rebalanced").count() == 1)
-    assert(got == want,
-      s"resumed index diverged from the uninterrupted run:\n$got\nvs\n$want")
-    full.close(); m2.close()
+    withTempDir("graft_ivf_resume") { tmp =>
+      val dir = tmp.toString
+      m1.index.save(dir)
+      m1.close()
+      val m2 = new IvfMaintainer(
+        VectorOps.IvfIndex.load(spark, dir),
+        "vec_id", "embedding", cvTrigger = 0.7, maxOverFactor = 1.5, trainCap = 0)
+      run(m2, Seq(1L -> driftRows(20, 40)))
+      val got = m2.index.assigned.select("cid", "id")
+        .as[(Long, Long)].collect().toSet
+      // the resumed run rebalanced on batch 1 exactly like the
+      // uninterrupted one (same trigger arithmetic over the same state)
+      assert(m2.occupancyLog(spark).filter($"action" === "rebalanced").count() == 1)
+      assert(got == want,
+        s"resumed index diverged from the uninterrupted run:\n$got\nvs\n$want")
+      full.close(); m2.close()
+    }
   }
 
   test("IvfPqMaintainer: quantized rung recommends a rebuild when streamed drift crosses the trigger") {
@@ -581,43 +585,45 @@ class StreamingSpec extends SparkSpec {
       VectorOps.IvfIndex.build(baseDf, "vec_id", "embedding", c = 4),
       "vec_id", "embedding")
     m1.ingest(0L, rows(0, 20))
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_replay").toString
-    m1.save(dir)
-    m1.close()
-    val m2 = IvfMaintainer.load(spark, dir, "vec_id", "embedding")
-    m2.ingest(0L, rows(0, 20)) // the at-least-once replay — must be a no-op
-    m2.ingest(1L, rows(20, 40))
-    val log = m2.occupancyLog(spark)
-      .select($"batch", $"action", $"total").as[(Long, String, Long)].collect()
-    assert(log.contains((0L, "replay_skipped", 60L)),
-      s"replayed batch must be a telemetry-visible no-op: ${log.toSeq}")
-    assert(m2.index.size == 80, "fresh batch after the replay must still ingest")
-    assert(m2.index.assigned.select("id").distinct().count() == 80)
-    m2.close()
+    withTempDir("graft_ivf_replay") { tmp =>
+      val dir = tmp.toString
+      m1.save(dir)
+      m1.close()
+      val m2 = IvfMaintainer.load(spark, dir, "vec_id", "embedding")
+      m2.ingest(0L, rows(0, 20)) // the at-least-once replay — must be a no-op
+      m2.ingest(1L, rows(20, 40))
+      val log = m2.occupancyLog(spark)
+        .select($"batch", $"action", $"total").as[(Long, String, Long)].collect()
+      assert(log.contains((0L, "replay_skipped", 60L)),
+        s"replayed batch must be a telemetry-visible no-op: ${log.toSeq}")
+      assert(m2.index.size == 80, "fresh batch after the replay must still ingest")
+      assert(m2.index.assigned.select("id").distinct().count() == 80)
+      m2.close()
 
-    // same contract on the quantized rung, WITHOUT a session boundary
-    // (the in-memory watermark path)
-    val pq = new IvfPqMaintainer(
-      VectorOps.IvfPqIndex.build(baseDf, "vec_id", "embedding", c = 4, m = 2, k = 4),
-      "vec_id", "embedding")
-    pq.ingest(0L, rows(0, 20))
-    pq.ingest(0L, rows(0, 20)) // replay
-    pq.ingest(1L, rows(20, 40))
-    assert(pq.occupancyLog(spark).filter($"action" === "replay_skipped").count() == 1)
-    assert(pq.index.codes.select("id").distinct().count() == 80)
-    pq.close()
+      // same contract on the quantized rung, WITHOUT a session boundary
+      // (the in-memory watermark path)
+      val pq = new IvfPqMaintainer(
+        VectorOps.IvfPqIndex.build(baseDf, "vec_id", "embedding", c = 4, m = 2, k = 4),
+        "vec_id", "embedding")
+      pq.ingest(0L, rows(0, 20))
+      pq.ingest(0L, rows(0, 20)) // replay
+      pq.ingest(1L, rows(20, 40))
+      assert(pq.occupancyLog(spark).filter($"action" === "replay_skipped").count() == 1)
+      assert(pq.index.codes.select("id").distinct().count() == 80)
+      pq.close()
 
-    // batch-id SEQUENCE RESET is NOT a replay: a loop resumed with a
-    // NEW checkpoint dir restarts batch ids at 0 over genuinely fresh
-    // data — the watermark alone would drop it; the id-overlap ground
-    // truth must let it ingest
-    // (dir holds m1's state: base 40 + batch 0's 20 rows, watermark 0)
-    val m3 = IvfMaintainer.load(spark, dir, "vec_id", "embedding")
-    m3.ingest(0L, rows(40, 50)) // id 0 <= watermark 0, but ids are fresh
-    assert(m3.occupancyLog(spark).filter($"action" === "replay_skipped").count() == 0,
-      "fresh data under a reset batch-id sequence must not be dropped")
-    assert(m3.index.size == 70)
-    m3.close()
+      // batch-id SEQUENCE RESET is NOT a replay: a loop resumed with a
+      // NEW checkpoint dir restarts batch ids at 0 over genuinely fresh
+      // data — the watermark alone would drop it; the id-overlap ground
+      // truth must let it ingest
+      // (dir holds m1's state: base 40 + batch 0's 20 rows, watermark 0)
+      val m3 = IvfMaintainer.load(spark, dir, "vec_id", "embedding")
+      m3.ingest(0L, rows(40, 50)) // id 0 <= watermark 0, but ids are fresh
+      assert(m3.occupancyLog(spark).filter($"action" === "replay_skipped").count() == 0,
+        "fresh data under a reset batch-id sequence must not be dropped")
+      assert(m3.index.size == 70)
+      m3.close()
+    }
   }
 
   test("IvfPqMaintainer.rebuildFrom consumes the recommendation: drift -> rebuild -> CV restored, loop resumes via save/load") {
@@ -682,32 +688,36 @@ class StreamingSpec extends SparkSpec {
     fresh.close()
     assert(got == want, s"rebuilt index search diverged:\n$got\nvs\n$want")
     // the loop resumes across a session boundary: save, load, ingest on
-    val dir = java.nio.file.Files.createTempDirectory("graft_pq_rebuild").toString
-    m.save(dir)
-    m.close()
-    val m2 = IvfPqMaintainer.load(spark, dir, raw.unionAll(driftRows(40, 50)),
-      "vec_id", "embedding", cvTrigger = 0.7)
-    m2.ingest(1L, driftRows(20, 40)) // the post-restart replay — skipped
-    m2.ingest(2L, driftRows(40, 50))
-    assert(m2.occupancyLog(spark).filter($"action" === "replay_skipped").count() == 1)
-    assert(m2.index.codes.select("id").distinct().count() == 90)
-    m2.close()
+    withTempDir("graft_pq_rebuild") { tmp =>
+      val dir = tmp.toString
+      m.save(dir)
+      m.close()
+      val m2 = IvfPqMaintainer.load(spark, dir, raw.unionAll(driftRows(40, 50)),
+        "vec_id", "embedding", cvTrigger = 0.7)
+      m2.ingest(1L, driftRows(20, 40)) // the post-restart replay — skipped
+      m2.ingest(2L, driftRows(40, 50))
+      assert(m2.occupancyLog(spark).filter($"action" === "replay_skipped").count() == 1)
+      assert(m2.index.codes.select("id").distinct().count() == 90)
+      m2.close()
+    }
   }
 
   test("at-least-once foreachBatch sink writes batches before commit (KQ-2 streaming)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sink_test").toString
-    val in = MemoryStream[String]
-    val counts = StatefulOps.runningCount(in.toDS()).toDF()
-    val q = SinkOps.atLeastOnce(counts, s"$dir/ckpt", "1 second") { (batch, epoch) =>
-      batch.write.mode("append").parquet(s"$dir/out")
-    }.outputMode(OutputMode.Update()).start()
-    in.addData("x", "y", "x")
-    q.processAllAvailable()
-    q.stop()
-    val back = spark.read.parquet(s"$dir/out").as[(String, Long)].collect().toMap
-    assert(back == Map("x" -> 2L, "y" -> 1L))
-    assert(new java.io.File(s"$dir/ckpt/commits").list().nonEmpty,
-      "checkpoint must record the committed epoch (kasper markOffsets analog)")
+    withTempDir("graft_sink_test") { tmp =>
+      val dir = tmp.toString
+      val in = MemoryStream[String]
+      val counts = StatefulOps.runningCount(in.toDS()).toDF()
+      val q = SinkOps.atLeastOnce(counts, s"$dir/ckpt", "1 second") { (batch, epoch) =>
+        batch.write.mode("append").parquet(s"$dir/out")
+      }.outputMode(OutputMode.Update()).start()
+      in.addData("x", "y", "x")
+      q.processAllAvailable()
+      q.stop()
+      val back = spark.read.parquet(s"$dir/out").as[(String, Long)].collect().toMap
+      assert(back == Map("x" -> 2L, "y" -> 1L))
+      assert(new java.io.File(s"$dir/ckpt/commits").list().nonEmpty,
+        "checkpoint must record the committed epoch (kasper markOffsets analog)")
+    }
   }
 
   test("IVF index absorbs a vector stream via foreachBatch append (ingest without retrain)") {
@@ -859,32 +869,34 @@ class StreamingSpec extends SparkSpec {
     val docs = Seq((1L, "alpha beta gamma"), (2L, "beta beta delta"),
       (3L, "gamma delta epsilon"), (4L, "alpha epsilon zeta"))
     def frame(ids: Long*) = docs.filter(d => ids.contains(d._1)).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft_postings").toString
-    // uninterrupted reference
-    val full = new PostingsMaintainer("doc_id", "text")
-    full.ingest(0L, frame(1L, 2L)); full.ingest(1L, frame(3L)); full.ingest(2L, frame(4L))
-    val want = full.search(Seq("alpha", "delta"), k = 5)
-      .as[(Long, Long)].collect().toSeq
-    full.close()
-    // crash after batch 1, save, reload, foreachBatch re-delivers batch 1
-    val m1 = new PostingsMaintainer("doc_id", "text")
-    m1.ingest(0L, frame(1L, 2L)); m1.ingest(1L, frame(3L))
-    m1.save(dir, buckets = 8)
-    m1.close()
-    val m2 = PostingsMaintainer.load(spark, dir, "doc_id", "text")
-    m2.ingest(1L, frame(3L)) // at-least-once replay with its pre-crash id
-    m2.ingest(2L, frame(4L))
-    val got = m2.search(Seq("alpha", "delta"), k = 5)
-      .as[(Long, Long)].collect().toSeq
-    assert(got == want, s"restarted $got != uninterrupted $want")
-    val acts = m2.telemetry(spark).select("action").as[String].collect().toSeq
-    assert(acts == Seq("built", "loaded", "replay_skipped", "appended"),
-      s"actions: $acts")
-    // the saved postings use the bucket-partitioned pruning layout
-    val buckets = new java.io.File(s"$dir/postings").listFiles()
-      .filter(_.getName.startsWith("bucket=")).map(_.getName).toSeq
-    assert(buckets.nonEmpty, "postings must save bucket-partitioned")
-    m2.close()
+    withTempDir("graft_postings") { tmp =>
+      val dir = tmp.toString
+      // uninterrupted reference
+      val full = new PostingsMaintainer("doc_id", "text")
+      full.ingest(0L, frame(1L, 2L)); full.ingest(1L, frame(3L)); full.ingest(2L, frame(4L))
+      val want = full.search(Seq("alpha", "delta"), k = 5)
+        .as[(Long, Long)].collect().toSeq
+      full.close()
+      // crash after batch 1, save, reload, foreachBatch re-delivers batch 1
+      val m1 = new PostingsMaintainer("doc_id", "text")
+      m1.ingest(0L, frame(1L, 2L)); m1.ingest(1L, frame(3L))
+      m1.save(dir, buckets = 8)
+      m1.close()
+      val m2 = PostingsMaintainer.load(spark, dir, "doc_id", "text")
+      m2.ingest(1L, frame(3L)) // at-least-once replay with its pre-crash id
+      m2.ingest(2L, frame(4L))
+      val got = m2.search(Seq("alpha", "delta"), k = 5)
+        .as[(Long, Long)].collect().toSeq
+      assert(got == want, s"restarted $got != uninterrupted $want")
+      val acts = m2.telemetry(spark).select("action").as[String].collect().toSeq
+      assert(acts == Seq("built", "loaded", "replay_skipped", "appended"),
+        s"actions: $acts")
+      // the saved postings use the bucket-partitioned pruning layout
+      val buckets = new java.io.File(s"$dir/postings").listFiles()
+        .filter(_.getName.startsWith("bucket=")).map(_.getName).toSeq
+      assert(buckets.nonEmpty, "postings must save bucket-partitioned")
+      m2.close()
+    }
   }
 
   test("CooccurMaintainer: stream-folded pairs equal batch skipGramPairs; replay skipped; partial overlap fails") {
@@ -1097,25 +1109,27 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("idempotent parquet sink: replayed epoch does not duplicate output") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_idem").toString
-    val in = MemoryStream[String]
-    val counts = StatefulOps.runningCount(in.toDS()).toDF()
-    val q = SinkOps.toParquetIdempotent(counts, s"$dir/out", s"$dir/ckpt")
-      .outputMode(OutputMode.Update()).start()
-    in.addData("x", "y")
-    q.processAllAvailable()
-    q.stop()
-    val once = spark.read.parquet(s"$dir/out").count()
-    // simulate the crash-replay window: re-write the batch of the epoch
-    // that actually produced the rows
-    val written = spark.read.parquet(s"$dir/out")
-    val epoch = written.agg(max("__epoch")).head().get(0).toString.toLong
-    val replay = written.filter(col("__epoch") === epoch).drop("__epoch")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    replay.withColumn("__epoch", lit(epoch))
-      .write.mode("overwrite").partitionBy("__epoch").parquet(s"$dir/out")
-    val after = spark.read.parquet(s"$dir/out").count()
-    assert(after == once, "replaying an epoch must overwrite, not append")
+    withTempDir("graft_idem") { tmp =>
+      val dir = tmp.toString
+      val in = MemoryStream[String]
+      val counts = StatefulOps.runningCount(in.toDS()).toDF()
+      val q = SinkOps.toParquetIdempotent(counts, s"$dir/out", s"$dir/ckpt")
+        .outputMode(OutputMode.Update()).start()
+      in.addData("x", "y")
+      q.processAllAvailable()
+      q.stop()
+      val once = spark.read.parquet(s"$dir/out").count()
+      // simulate the crash-replay window: re-write the batch of the epoch
+      // that actually produced the rows
+      val written = spark.read.parquet(s"$dir/out")
+      val epoch = written.agg(max("__epoch")).head().get(0).toString.toLong
+      val replay = written.filter(col("__epoch") === epoch).drop("__epoch")
+      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+      replay.withColumn("__epoch", lit(epoch))
+        .write.mode("overwrite").partitionBy("__epoch").parquet(s"$dir/out")
+      val after = spark.read.parquet(s"$dir/out").count()
+      assert(after == once, "replaying an epoch must overwrite, not append")
+    }
   }
 
   test("runningCount on the RocksDB state store (A10/A11 scale path)") {
@@ -1406,26 +1420,28 @@ class StreamingSpec extends SparkSpec {
     // ValueState row comes back from the RocksDB checkpoint, not from
     // reprocessing
     import StatefulOps.ChunkRow
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_tws_restart").toString
-    val buf = scala.collection.mutable.ArrayBuffer.empty[ChunkRow]
-    withRocksDbStateStore {
-      val in = MemoryStream[ChunkRow]
-      def start() = StatefulOps.chunkDedupGate(in.toDS())
-        .writeStream.outputMode(OutputMode.Append())
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (df: org.apache.spark.sql.Dataset[ChunkRow], _: Long) =>
-          val rows = df.collect()
-          buf.synchronized { buf ++= rows }
-          ()
-        }.start()
-      val q1 = start()
-      in.addData(ChunkRow(1L, 0L, "a b c")); q1.processAllAvailable(); q1.stop()
-      assert(buf.toList == List(ChunkRow(1L, 0L, "a b c")))
-      val q2 = start()
-      in.addData(ChunkRow(2L, 0L, "a b c"), ChunkRow(2L, 1L, "n e w"))
-      q2.processAllAvailable(); q2.stop()
-      assert(buf.toList.drop(1) == List(ChunkRow(2L, 1L, "n e w")),
-        s"recovered state failed to suppress the replayed chunk: $buf")
+    withTempDir("graft_tws_restart") { tmp =>
+      val ckpt = tmp.toString
+      val buf = scala.collection.mutable.ArrayBuffer.empty[ChunkRow]
+      withRocksDbStateStore {
+        val in = MemoryStream[ChunkRow]
+        def start() = StatefulOps.chunkDedupGate(in.toDS())
+          .writeStream.outputMode(OutputMode.Append())
+          .option("checkpointLocation", ckpt)
+          .foreachBatch { (df: org.apache.spark.sql.Dataset[ChunkRow], _: Long) =>
+            val rows = df.collect()
+            buf.synchronized { buf ++= rows }
+            ()
+          }.start()
+        val q1 = start()
+        in.addData(ChunkRow(1L, 0L, "a b c")); q1.processAllAvailable(); q1.stop()
+        assert(buf.toList == List(ChunkRow(1L, 0L, "a b c")))
+        val q2 = start()
+        in.addData(ChunkRow(2L, 0L, "a b c"), ChunkRow(2L, 1L, "n e w"))
+        q2.processAllAvailable(); q2.stop()
+        assert(buf.toList.drop(1) == List(ChunkRow(2L, 1L, "n e w")),
+          s"recovered state failed to suppress the replayed chunk: $buf")
+      }
     }
   }
 

@@ -160,14 +160,15 @@ class TopicProcessorSpec extends SparkSpec {
     }
 
     // the same topology wired as runWith was before the observation
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-wc-plain")
-    val in2 = MemoryStream[Message]
-    val plain = graft.examples.Examples.wordCount(in2.toDS()).toDF().writeStream
-      .option("checkpointLocation", ckpt.toString)
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Update())
-      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime("0 seconds"))
-      .foreachBatch(sink).start()
-    val plainJobs = try feed(in2, plain) finally graft.core.Graft.removeRecursively(ckpt)
+    val plainJobs = withTempDir("graft-wc-plain") { ckpt =>
+      val in2 = MemoryStream[Message]
+      val plain = graft.examples.Examples.wordCount(in2.toDS()).toDF().writeStream
+        .option("checkpointLocation", ckpt.toString)
+        .outputMode(org.apache.spark.sql.streaming.OutputMode.Update())
+        .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime("0 seconds"))
+        .foreachBatch(sink).start()
+      feed(in2, plain)
+    }
     assert(plainJobs > 0)
     assert(observedJobs <= plainJobs,
       s"jobs per batch rose with the observation: $observedJobs vs $plainJobs")

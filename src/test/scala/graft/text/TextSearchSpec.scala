@@ -282,19 +282,21 @@ class TextSearchSpec extends SparkSpec {
   test("saved index lookup prunes to the terms' bucket partitions") {
     val docs = graft.core.Tables(spark, sfDir).documents
     val idx = TextSearch.invertedIndex(docs, "doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft_invidx").toString
-    TextSearch.saveIndex(idx, dir, buckets = 16)
-    val terms = Seq("the", "and", "graph")
-    val got = TextSearch.loadPostings(spark, dir, terms, buckets = 16)
-    // correctness: identical to filtering the in-memory index
-    val want = idx.filter(col("token").isin(terms: _*))
-      .as[(String, Long, Seq[Long])].collect().toSet
-    assert(got.as[(String, Long, Seq[Long])].collect().toSet == want)
-    // the bucket IN-filter must reach the scan as a partition filter:
-    // with 16 buckets and ≤3 probed, pruned file count < total file count
-    val plan = got.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("bucket"),
-      s"bucket pruning missing from scan:\n$plan")
+    withTempDir("graft_invidx") { tmp =>
+      val dir = tmp.toString
+      TextSearch.saveIndex(idx, dir, buckets = 16)
+      val terms = Seq("the", "and", "graph")
+      val got = TextSearch.loadPostings(spark, dir, terms, buckets = 16)
+      // correctness: identical to filtering the in-memory index
+      val want = idx.filter(col("token").isin(terms: _*))
+        .as[(String, Long, Seq[Long])].collect().toSet
+      assert(got.as[(String, Long, Seq[Long])].collect().toSet == want)
+      // the bucket IN-filter must reach the scan as a partition filter:
+      // with 16 buckets and ≤3 probed, pruned file count < total file count
+      val plan = got.queryExecution.executedPlan.toString
+      assert(plan.contains("PartitionFilters") && plan.contains("bucket"),
+        s"bucket pruning missing from scan:\n$plan")
+    }
   }
 
   test("bm25IntTopK: tf saturates, rarity wins, length normalization penalizes padding") {
