@@ -84,6 +84,14 @@ object Graft {
       .config("spark.sql.parquet.aggregatePushdown", "true")
       .config("spark.sql.files.maxPartitionBytes", (128L * 1024 * 1024).toString)
       .config("spark.ui.enabled", "false")
+      // the JVM-wide generated-class cache (static: the first session's
+      // value holds for the process). Spark's default of 100 is less than
+      // one round of the iterative queries compiles, so each round evicted
+      // its classes before reusing them and recompiled them all. Measured
+      // on sf0.001 with an unbounded cache: q104 + q67 + q248 compile 231
+      // distinct classes; adding 8 relational and 24 embedding-chain
+      // queries brings one session to 1,064. 2000 holds that mix.
+      .config("spark.sql.codegen.cache.maxEntries", "2000")
 
   /** Opt into the RocksDB state store for streaming state — the scale
     * path for keyed state (spillable, incremental-checkpointed), playing

@@ -19,8 +19,9 @@ object Examples {
     * 5 s, never because 1,000 messages are waiting (kasper's BatchSize
     * trigger has no counterpart here; see [[TopicProcessorConfig]]).
     */
-  def wordCountTopology(name: String): TopicProcessor = new TopicProcessor(
-    TopicProcessorConfig(name = name, inputTopics = Seq("words")), wordCount)
+  def wordCountTopology(name: String, checkpointDir: String = ""): TopicProcessor =
+    new TopicProcessor(TopicProcessorConfig(name = name, inputTopics = Seq("words"),
+      checkpointDir = checkpointDir), wordCount)
 
   /** [[wordCountTopology]]'s transform. */
   def wordCount(in: Dataset[Message]): Dataset[OutMessage] = {
@@ -48,13 +49,14 @@ object Examples {
     * (topic/partition/offset) preserved — the reference prints the line;
     * here it's emitted to an audit topic so the behavior is assertable.
     */
-  def multiTopicTopology(name: String): TopicProcessor = new TopicProcessor(
-    TopicProcessorConfig(name = name, inputTopics = Seq("hello", "world")),
-    in => {
-      import in.sparkSession.implicits._
-      in.map(m => OutMessage("audit", m.key,
-        (s"Got message: key='${new String(m.key, UTF_8)}', " +
-          s"value='${new String(m.value, UTF_8)}' at offset='${m.offset}' " +
-          s"(topic='${m.topic}', partition='${m.partition}')").getBytes(UTF_8)))
-    })
+  def multiTopicTopology(name: String, checkpointDir: String = ""): TopicProcessor =
+    new TopicProcessor(TopicProcessorConfig(name = name, inputTopics = Seq("hello", "world"),
+      checkpointDir = checkpointDir),
+      in => {
+        import in.sparkSession.implicits._
+        in.map(m => OutMessage("audit", m.key,
+          (s"Got message: key='${new String(m.key, UTF_8)}', " +
+            s"value='${new String(m.value, UTF_8)}' at offset='${m.offset}' " +
+            s"(topic='${m.topic}', partition='${m.partition}')").getBytes(UTF_8)))
+      })
 }

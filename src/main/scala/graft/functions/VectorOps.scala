@@ -1949,11 +1949,19 @@ object VectorOps {
       * exchange+sort are gone the same way; the per-row work is a
       * c-entry scored-struct sort (cosines computed once each, exactly
       * as the exploded form did).
+      *
+      * An empty centroid frame fails the query: the fold would seed from
+      * a missing cell 0 and emit every vector with a NULL cid. The check
+      * rides the one-row cell aggregate, so it costs no job of its own.
       */
     private[functions] def assignTop(of: DataFrame, cents: DataFrame,
-                                     probes: Int): DataFrame =
+                                     probes: Int): DataFrame = {
+      val carr = cellArrOf(cents).select(
+        when(size(col("__cells")) === 0, raise_error(lit(
+          "requirement failed: assignTop needs a non-empty centroid frame " +
+            "(an empty one would assign every vector a NULL cid)")))
+          .otherwise(col("__cells")).as("__cells"))
       if (probes == 1) {
-        val carr = cellArrOf(cents)
         val hd = element_at(col("__cells"), 1)
         val best = aggregate(
           slice(col("__cells"), lit(2), greatest(size(col("__cells")) - 1, lit(0))),
@@ -1968,7 +1976,6 @@ object VectorOps {
         of.crossJoin(broadcast(carr))
           .select(best.getField("c").as("cid"), col("id"), col("v"))
       } else {
-        val carr = cellArrOf(cents)
         val scoredArr = transform(col("__cells"), e =>
           struct(cosine(col("v"), e.getField("cv")).as("s"),
             e.getField("cid").as("c")))
@@ -1977,6 +1984,7 @@ object VectorOps {
           .select(col("id"), col("v"), explode(top).as("__t"))
           .select(col("__t").getField("c").as("cid"), col("id"), col("v"))
       }
+    }
 
     /** Lloyd-train the `c` coarse centroids over a cached (id, v) frame:
       * seeds = the c lowest-id vectors (of a deterministic hash-sample

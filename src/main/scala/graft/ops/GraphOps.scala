@@ -261,9 +261,18 @@ object GraphOps {
     require(liftCapMilli >= 1, s"liftCapMilli must be positive, got $liftCapMilli")
     val P = HashP
     val spark = pairsIn.sparkSession
-    val pairs = ScaleOps.trackCache(pairsIn.select(
+    // the pair corpus is a LAZY CHECKPOINT leaf, not a cache: every later
+    // action here plans over a LogicalRDD instead of the walk lineage. As
+    // a cache over the cached walks over the cached edges, each reference
+    // printed its whole cached plan (Final + Initial under AQE) into the
+    // SQL UI event strings Spark renders even with the UI off: 114 MB of
+    // plan text per q248 execution, 9.4 MB in one event (PlanCheckSpec's
+    // q248 guard). The `tot` aggregate below is its
+    // materializer (a full aggregate, never a limit(1) probe), and it is
+    // tracked first so the requires' failure paths release it too.
+    val pairs = ScaleOps.trackCheckpoint(pairsIn.select(
       col(centerCol).cast("long").as("c"), col(contextCol).cast("long").as("x"),
-      col(nCol).cast("long").as("n")))
+      col(nCol).cast("long").as("n")).localCheckpoint(false))
     val tot = pairs.agg(coalesce(sum(col("n")), lit(0L)).as("nn"),
       coalesce(max(col("n")), lit(0L)).as("mx")).head()
     val (nn, mx) = (tot.getLong(0), tot.getLong(1))

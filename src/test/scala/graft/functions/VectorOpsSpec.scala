@@ -94,6 +94,20 @@ class VectorOpsSpec extends SparkSpec {
     idx.close()
   }
 
+  test("assignTop refuses an empty centroid frame instead of emitting NULL cids") {
+    val v = Seq((1L, Seq(1.0, 0.0)), (2L, Seq(0.0, 1.0))).toDF("id", "v")
+    val cents = Seq((7L, Seq(1.0, 0.0))).toDF("cid", "cv")
+    // a non-empty frame assigns every vector, at one probe and at many
+    assert(IvfIndex.assignTop(v, cents, 1).select("cid").as[Long].collect()
+      .toSeq == Seq(7L, 7L))
+    assert(IvfIndex.assignTop(v, cents, 2).count() == 2L)
+    for (probes <- Seq(1, 2)) {
+      val ex = intercept[Exception](
+        IvfIndex.assignTop(v, cents.filter($"cid" < 0L), probes).collect())
+      assert(ex.getMessage.contains("non-empty centroid frame"), ex.getMessage)
+    }
+  }
+
   test("filtered IVF search: only allowed ids, exact at full probe, recall at partial") {
     val e = Tables(spark, sfDir).embeddings
     val queries = e.filter($"vec_id" < 5)

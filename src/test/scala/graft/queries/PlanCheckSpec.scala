@@ -354,6 +354,87 @@ class PlanCheckSpec extends SparkSpec {
     }
   }
 
+  test("biasedHashWalks' ticket windows are partitioned by (start, walk)") {
+    // q248's final plan joins two checkpoint leaves (the PPMI nodes and
+    // last-round partials), so the sweep above finds no window in it:
+    // the walk windows are guarded on the operator's own plan instead
+    import spark.implicits._
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (2L, 1L), (3L, 2L))
+      .toDF("src", "dst")
+    val windows = windowNodes(graft.ops.GraphOps.biasedHashWalks(
+      edges, "src", "dst", steps = 2, walksPerNode = 2))
+    spark.catalog.clearCache()
+    graft.ops.ScaleOps.release()
+    assert(windows.nonEmpty, "biasedHashWalks planned no Window")
+    for (w <- windows) assert(
+      w.partitionSpec.flatMap(_.references.map(_.name)).toSet ==
+        Set("start", "walk"),
+      s"walk window not partitioned by (start, walk): ${w.partitionSpec}")
+  }
+
+  test("q248 renders bounded plan text and compiles nothing on a warm run") {
+    // Spark renders a plan description for every SQL execution start and
+    // AQE plan update, UI or not. A cached frame prints its whole cached
+    // plan at each reference, so nested caches over the walk corpus made
+    // one q248 event ~9 MB; the pair corpus is now a checkpoint leaf.
+    // A warm run must also find every generated class in the codegen
+    // cache (Graft.configure sizes it above Spark's default of 100).
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate, SparkListenerSQLExecutionStart}
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val sizes = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val fences = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(fences.add)
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          sizes.add(s.physicalPlanDescription.length.toLong)
+        case u: SparkListenerSQLAdaptiveExecutionUpdate =>
+          sizes.add(u.physicalPlanDescription.length.toLong)
+        case _ =>
+      }
+    }
+    // events of one listener queue arrive in order: once the fence job's
+    // start is seen, every description rendered before it was counted
+    def drained(): Seq[Long] = {
+      val sc = spark.sparkContext
+      val fence = s"fence-${System.nanoTime()}"
+      sc.setJobGroup(fence, "listener fence")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      org.scalatest.concurrent.Eventually.eventually(
+        org.scalatest.concurrent.Eventually.timeout(
+          org.scalatest.time.Span(10, org.scalatest.time.Seconds))) {
+        assert(fences.contains(fence))
+      }
+      import scala.jdk.CollectionConverters._
+      val out = sizes.asScala.toSeq
+      sizes.clear()
+      out
+    }
+    def runQ248(): (Seq[Long], Long) = {
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      try Queries.all("q248_ppmi_embeddings")(spark, sfDir)
+        .write.format("noop").mode("overwrite").save()
+      finally graft.ops.ScaleOps.releaseAll(spark, blocking = true)
+      (drained(), CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val ((cold, _), (warm, warmCompiles)) =
+      try (runQ248(), runQ248())
+      finally spark.sparkContext.removeSparkListener(listener)
+    info(s"cold: ${cold.size} events, ${cold.sum} chars, max ${cold.max}; " +
+      s"warm: max ${warm.max}, $warmCompiles classes compiled")
+    // measured on this fixture: with the pair corpus cached, 36 events
+    // of 114.4M chars, the largest 9.40M, and 83 classes recompiled by a
+    // warm run (codegen cache at 100); as a checkpoint leaf, 41 events of
+    // 3.95M chars, the largest 0.82M, and none recompiled
+    assert((cold ++ warm).max < 2000000L,
+      s"a q248 plan description rendered ${(cold ++ warm).max} chars")
+    assert(warmCompiles == 0L, s"a warm q248 run compiled $warmCompiles classes")
+  }
+
   test("q202-q207 TPC-H shapes: semi-join lateness, pushdown, broadcast dims, TakeOrdered") {
     // Q4 shape: the correlated EXISTS must plan as a left-semi join with
     // the lateness predicate inside the join, never a nested loop
