@@ -48,6 +48,9 @@ import org.apache.spark.sql.SparkSession
   * (`gc_sec`/`gc_count`) and per pass (`gc_sec_passes`), and the
   * maximum persistent-RDD count observed AFTER per-query cleanup
   * (`rdd_resident_max` — nonzero means something leaked past hygiene).
+  * `jobs` holds each query's Spark job count per pass: every query runs
+  * under its own job group, which a listener counts (pass 1 includes the
+  * one-off schema job of each table's first read).
   * A failed run still times as -1; the full line's `errors` map records
   * each failing query's first error class and message (cut to 2,000
   * chars), so a -1 says why.
@@ -83,11 +86,22 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
+    // per-query job counts: each query runs under its own job group, and
+    // this listener counts the job starts of each group
+    val jobStarts = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(g => jobStarts.merge(g, 1, (a: Integer, b: Integer) => a + b))
+    })
+
     var ranCount = 0
     var rddResidentMax = 0
     var dirtySinceGc = false
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    def run(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    def run(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
+            group: String): Double = {
+      spark.sparkContext.setJobGroup(group, name)
       val t0 = System.nanoTime()
       val elapsed =
         try {
@@ -97,7 +111,7 @@ object Bench {
           case e: Throwable =>
             errors.getOrElseUpdate(name, s"${e.getClass.getName}: ${e.getMessage}".take(2000))
             -1.0
-        }
+        } finally spark.sparkContext.clearJobGroup()
       // cleanup OUTSIDE the timed window — hygiene cost must not be
       // charged to the query it follows. INCREMENTAL (round-11): the
       // full sweep + periodic GC runs only after queries that actually
@@ -131,7 +145,7 @@ object Bench {
     }
 
     // one tiny warmup so JVM/codegen startup isn't charged to the first query
-    run("warmup", (s, d) => graft.queries.Queries.q14_sort_distinct(s, d))
+    run("warmup", (s, d) => graft.queries.Queries.q14_sort_distinct(s, d), "warmup")
 
     // optional query-name filter (dev use; the driver passes no args)
     val only = args.toSet
@@ -142,8 +156,8 @@ object Bench {
     val gcPass = scala.collection.mutable.ArrayBuffer.empty[Double]
     val nPasses = sys.env.get("SPARK_GRAFT_BENCH_PASSES")
       .flatMap(_.trim.toIntOption).filter(_ >= 1).getOrElse(3)
-    val passes = (1 to nPasses).map { _ =>
-      val p = ordered.map { case (name, fn) => name -> run(name, fn) }
+    val passes = (1 to nPasses).map { pass =>
+      val p = ordered.map { case (name, fn) => name -> run(name, fn, s"$name/$pass") }
       val (t, _) = gcStats()
       gcPass += (t - gcMark) / 1e3
       gcMark = t
@@ -155,6 +169,18 @@ object Bench {
       name -> (if (ok.nonEmpty) ok.min else -1.0)
     }
     val (gcT1, gcC1) = gcStats()
+    // listener events arrive in order: once a fence job's start is seen,
+    // every query's job starts before it were counted
+    spark.sparkContext.setJobGroup("fence", "listener fence")
+    try spark.sparkContext.parallelize(Seq(1), 1).count()
+    finally spark.sparkContext.clearJobGroup()
+    val fenceDeadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+    while (!jobStarts.containsKey("fence") && System.nanoTime() < fenceDeadline)
+      Thread.sleep(10)
+    val jobs = ordered.map { case (name, _) =>
+      "\"" + name + "\":" + (1 to nPasses)
+        .map(pass => jobStarts.getOrDefault(s"$name/$pass", 0)).mkString("[", ",", "]")
+    }.mkString("{", ",", "}")
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
     val detail = ordered.map { case (name, _) =>
       "\"" + name + "\":" +
@@ -198,7 +224,7 @@ object Bench {
     // `bench_result.json` next to the repo root (path also printed).
     val errs = errors.map { case (k, v) => jsonString(k) + ":" + jsonString(v) }
       .mkString("{", ",", "}")
-    val full = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","load_avg":$loadAvg,"passes":$nPasses,"pass_totals":$pt,"passes_detail":$detail,"spread":$spread,"gc_sec":${(gcT1 - gcT0) / 1e3},"gc_count":${gcC1 - gcC0},"gc_sec_passes":$gp,"hygiene":$hygiene,"rdd_resident_max":$rddResidentMax,"errors":$errs}"""
+    val full = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","load_avg":$loadAvg,"passes":$nPasses,"pass_totals":$pt,"passes_detail":$detail,"spread":$spread,"gc_sec":${(gcT1 - gcT0) / 1e3},"gc_count":${gcC1 - gcC0},"gc_sec_passes":$gp,"hygiene":$hygiene,"rdd_resident_max":$rddResidentMax,"jobs":$jobs,"errors":$errs}"""
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_result.json")
     try {
       val w = new java.io.PrintWriter(new java.io.File(outPath), "UTF-8")

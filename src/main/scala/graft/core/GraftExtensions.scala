@@ -10,8 +10,13 @@ import org.apache.spark.sql.SparkSessionExtensions
   * on. [[Graft.configure]] sets the conf, so every engine-built session
   * carries the SQL surface; q135 drives it end-to-end through the
   * oracle gate.
+  *
+  * It also registers [[OnePartitionSmallSort]], the AQE stage-prep rule
+  * that sorts a small total-order result in one partition.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit =
+  override def apply(ext: SparkSessionExtensions): Unit = {
     org.apache.spark.sql.GraftSqlBridge.injectFunctions(ext)
+    ext.injectQueryStagePrepRule(OnePartitionSmallSort)
+  }
 }

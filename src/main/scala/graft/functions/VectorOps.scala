@@ -2050,6 +2050,12 @@ object VectorOps {
     * matching the old `orderBy(score.desc, id)` / `max(sim)` semantics
     * — so the output still hash-checks against the greedy-unrolled SQL
     * oracle (q136, the q104/q110 unrolling discipline).
+    *
+    * Null vectors: a candidate whose similarities to every selected row
+    * are null (a null embedding) has no score after the first step and
+    * is dropped, so the output can hold fewer than `k` rows. The old
+    * plan's null-ignoring `max()` kept such a candidate with a null
+    * score, selectable last.
     */
   def mmrSelect(vectors: DataFrame, idCol: String, vecCol: String,
                 queryId: Long, m: Int, k: Int, lambda: Double): DataFrame = {

@@ -1001,6 +1001,22 @@ class VectorOpsSpec extends SparkSpec {
     assert(got == Seq(1L, 2L, 4L), s"got $got")
   }
 
+  test("mmrSelect drops a null-vector candidate, whose similarities are all null") {
+    // 3 has a null embedding: a null relevance sorts it last in the pool
+    // and its similarities to the selected rows are all null, so no step
+    // can score it — the selection stops one short of k
+    val vecs = Seq(
+      (0L, Array(1.0f, 0.0f, 0.0f)),
+      (1L, Array(1.0f, 0.0f, 0.0f)),
+      (2L, Array(0.0f, 1.0f, 0.0f)),
+      (3L, null: Array[Float])
+    ).toDF("vec_id", "embedding")
+    val got = mmrSelect(vecs, "vec_id", "embedding",
+        queryId = 0L, m = 3, k = 3, lambda = 0.5)
+      .orderBy("rank").select("id").as[Long].collect().toSeq
+    assert(got == Seq(1L, 2L), s"got $got")
+  }
+
   test("quantizedGram matches a driver-side recomputation on crafted vectors") {
     val vecs = Seq(
       (1L, Array(0.0f, 1.0f, 2.0f)),

@@ -18,6 +18,22 @@ class PlanCheckSpec extends SparkSpec {
     } finally spark.conf.unset("spark.graft.sink.dir")
   }
 
+  /** All WindowExec nodes of `df`'s plan, descending through AQE and into
+    * the cached plans of InMemoryTableScans (trackCache'd frames).
+    */
+  private def deepWindows(df: org.apache.spark.sql.DataFrame)
+      : Seq[org.apache.spark.sql.execution.window.WindowExec] =
+    deepWindows(df.queryExecution.executedPlan)
+
+  private def deepWindows(p: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[org.apache.spark.sql.execution.window.WindowExec] =
+    allPlanNodes(p).flatMap {
+      case m: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
+        deepWindows(m.relation.cachedPlan)
+      case w: org.apache.spark.sql.execution.window.WindowExec => Seq(w)
+      case _ => Nil
+    }
+
   test("no shuffled CartesianProduct in any query plan") {
     // deliberate all-pairs shapes (q34/q35/q41 single-query-vector or
     // tiny-side crossJoins) must plan as BroadcastNestedLoopJoin; a
@@ -299,17 +315,9 @@ class PlanCheckSpec extends SparkSpec {
     // over bracket-pruned rows only — NOTHING is allowed to serialize
     // the corpus through one task
     // the CDF and median frames are trackCache'd, so their windows hide
-    // behind InMemoryTableScan — descend into cached plans too
-    def deepWindows(p: org.apache.spark.sql.execution.SparkPlan)
-        : Seq[org.apache.spark.sql.execution.window.WindowExec] =
-      allPlanNodes(p).flatMap {
-        case m: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
-          deepWindows(m.relation.cachedPlan)
-        case w: org.apache.spark.sql.execution.window.WindowExec => Seq(w)
-        case _ => Nil
-      }
+    // behind InMemoryTableScan
     val q224 = deepWindows(Queries.all("q224_customer_robust_stats")(
-      spark, sfDir).queryExecution.executedPlan)
+      spark, sfDir))
     spark.catalog.clearCache() // trackCache'd CDF/median frames
     graft.ops.ScaleOps.release()
     assert(q224.nonEmpty && q224.forall(_.partitionSpec.nonEmpty),
@@ -336,22 +344,34 @@ class PlanCheckSpec extends SparkSpec {
   }
 
   test("q248/q249/q250 new-rail windows are all partitioned") {
-    // q248's session windows ride the walk corpus ((start, walk) /
-    // per-src adjacency), q249's the dedup rank, q250's the (k, sid)
-    // sessionization — none may degrade to a single-partition sort
-    for (name <- Seq("q248_ppmi_embeddings", "q249_dedup_trend",
-        "q250_attribution_compare", "q252_embed_knn",
+    // q250's windows ride the (k, sid) sessionization, the embedding
+    // rail's the per-src kNN/top-3 ranks, q253's the per-doc candidate
+    // ranks — none may degrade to a single-partition sort. Several sit
+    // behind trackCache'd frames, so the sweep descends into cached plans
+    for (name <- Seq("q250_attribution_compare", "q252_embed_knn",
         "q253_dedup_modularity", "q254_weighted_pagerank",
-        "q255_embed_link_recon", "q256_placement_audit",
-        "q257_label_noise", "q258_hard_negatives",
-        "q259_embed_entity_groups")) {
-      val unpartitioned = windowNodes(Queries.all(name)(spark, sfDir))
-        .filter(_.partitionSpec.isEmpty)
+        "q255_embed_link_recon", "q257_label_noise",
+        "q258_hard_negatives", "q259_embed_entity_groups")) {
+      val windows = deepWindows(Queries.all(name)(spark, sfDir))
       spark.catalog.clearCache()
       graft.ops.ScaleOps.release()
-      assert(unpartitioned.isEmpty,
+      assert(windows.nonEmpty, s"$name planned no Window")
+      assert(windows.forall(_.partitionSpec.nonEmpty),
         s"$name contains a single-partition Window")
     }
+    // q249's pair windows sit below connectedComponents' checkpoint
+    // leaves, so they are checked on the operator that owns them (q248's
+    // walk windows likewise, in the biasedHashWalks spec below)
+    val pairs = deepWindows(graft.dedup.Dedup.jaccardPairs(
+      graft.core.Tables(spark, sfDir).documents, "text", "doc_id",
+      n = 3, threshold = 0.5))
+    spark.catalog.clearCache()
+    graft.ops.ScaleOps.release()
+    assert(pairs.nonEmpty && pairs.forall(_.partitionSpec.nonEmpty),
+      s"jaccardPairs windows: ${pairs.map(_.partitionSpec)}")
+    // q256's placement is a per-row struct-max: no Window at all
+    val q256 = deepWindows(Queries.all("q256_placement_audit")(spark, sfDir))
+    assert(q256.isEmpty, s"q256 planned ${q256.size} Windows")
   }
 
   test("biasedHashWalks' ticket windows are partitioned by (start, walk)") {
